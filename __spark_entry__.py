@@ -35,6 +35,96 @@ from kafkastreamsinteractivequeries_spark.sources.tables import (
 )
 
 # ---------------------------------------------------------------------------
+# Tagged unions: one key checks a whole query family as a union of branches,
+# each row naming its branch in a leading `variant` column.  BRANCHES is the
+# one place a branch tag is spelled; both engines build their union from it
+# in the declared order (tagged_union on Spark, sql_union for the oracle),
+# and bench.py times the branches it lists.
+# ---------------------------------------------------------------------------
+
+_KNN_TAGS = ("brute", "srp16", "ivf16", "pq8x16", "pq_rerank", "ivfpq")
+
+BRANCHES: dict[str, tuple[str, ...]] = {
+    "t5_stock_aggregation": ("agg", "daily", "rolled", "hllmerge"),
+    "q3_range_query": ("both", "lower_only", "upper_only"),
+    "q4_filtered_range": ("buys_gt_sells", "symbol_eq", "numeric_and"),
+    "q5_filtered_window_range": ("window_all", "filtered_range", "hopping"),
+    "a6_asof_purchase_click": ("bwd", "fwd", "bwdtol"),
+    "a11_revenue_kpis": (
+        "promo_ratio", "q21", "q22cnt", "q22bal", "q17", "q15", "q6", "q7",
+        "q8", "q9", "q13", "q18", "q2", "q11", "q16", "q20", "disjunctive",
+    ),
+    "d1_exact_dedup": (
+        "dedup", "groups", "incremental", "ids", "url", "host", "robots",
+        "sitemap", "pref",
+    ),
+    "d5_minhash_near_duplicates": ("lsh", "hybrid"),
+    "d6_ngram_jaccard_pairs": ("jaccard", "edit"),
+    "d7_simhash": ("sig", "pairs"),
+    "e1_event_analytics": (
+        "funnel", "cohort", "interval", "pagerank", "trustrank", "hits",
+        "wpagerank", "gsum", "hyperball",
+    ),
+    "e2_scd2_asof": ("dim", "asof"),
+    "e3_layout_keys": ("zorder", "hilbert", "compact"),
+    "m7_decoded_pixel_stats": (
+        "png", "apng", "resize", "dhash", "phash", "gate", "capdup",
+    ),
+    "p2_packing_chunking": ("pack", "chunk", "nostraddle", "chat", "fim", "span"),
+    "p3_sampling_split": (
+        "stratified", "mixture", "split", "keepbest", "wsample", "temperature",
+    ),
+    # the six kNN paths, then each approximate path's recall@10 against brute
+    "s1_knn": _KNN_TAGS + tuple(f"recall_{t}" for t in _KNN_TAGS[1:]),
+    "s4_embedding_near_duplicates": ("self", "decon", "semgroup", "semdrop"),
+    "x4_winnowing_fingerprint": (
+        "docmin", "full", "dupspan", "dupfrac", "trimmed", "linededup", "cdc",
+        "codespdx", "codestrip", "codenorm", "codefn", "codeclone", "codenear",
+    ),
+    "x6_quality_gates": (
+        "length", "constraint", "skew", "salted", "dsir", "qlrw", "qlr",
+        "gopher", "blocklist", "signals", "gate", "html", "mojibake", "nfc",
+        "qsketch", "qstream",
+    ),
+    "x7_bigram_logprob": ("score", "ccnet", "kn3"),
+    "x9_term_relevance": ("tfidf", "bm25", "rrf"),
+    "x10_cardinality_sketches": (
+        "kmv", "hll", "hllstream", "cms", "kmvset", "drift_lang", "drift_split",
+    ),
+    "x11_vocab_bpe": (
+        "vocab", "bpe", "segment", "segmenta", "tokvocab", "tokids",
+        "tokstream", "tokbin", "tokstats", "sftbin", "wpvocab", "wordpiece",
+        "uvocab", "unigram",
+    ),
+    "x13_decontamination": ("exact", "bloom", "fuzzy"),
+}
+
+
+def tagged_union(key: str, *parts: DataFrame) -> DataFrame:
+    """Union ``parts`` by name in BRANCHES[key] order, each prefixed with
+    its tag as the ``variant`` column."""
+    tags = BRANCHES[key]
+    assert len(parts) == len(tags), f"{key}: {len(parts)} parts for {len(tags)} tags"
+    out = None
+    for tag, part in zip(tags, parts):
+        part = part.select(F.lit(tag).alias("variant"), "*")
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def sql_union(key: str, *selects: str) -> str:
+    """The oracle side of ``tagged_union``: ``UNION ALL`` of ``selects``
+    (positional, so the first one names the columns), each prefixed with
+    its tag as the ``variant`` column."""
+    tags = BRANCHES[key]
+    assert len(selects) == len(tags), f"{key}: {len(selects)} selects for {len(tags)} tags"
+    return "\nUNION ALL\n".join(
+        f"SELECT '{tag}' AS variant, * FROM (\n{sel}\n)"
+        for tag, sel in zip(tags, selects)
+    )
+
+
+# ---------------------------------------------------------------------------
 # Serving table: the reference's stock-aggregation state store rebuilt from
 # the testdata `events` stream table (FIXTURES.md §5 mapping).
 # ---------------------------------------------------------------------------
@@ -258,16 +348,12 @@ def ensure_knn_indexes(s: SparkSession, d: str) -> dict[str, DataFrame]:
     }
 
 
-def knn_union(
+def knn_branches(
     s: SparkSession, d: str, index: dict[str, DataFrame] | None = None
-) -> DataFrame:
-    """The six-branch kNN union (brute ⊕ srp16 ⊕ ivf16 ⊕ pq8x16 ⊕
-    pq_rerank ⊕ ivfpq) BEFORE the localCheckpoint pin `_s1` adds for the recall
-    branches.  Module-level so the plan-contract tests
-    (`test_knn_union_no_corpus_shuffle`,
-    `test_pq_adc_stays_columnar_with_broadcast_codebook`) can audit the
-    full kNN lineage — the checkpoint boundary in the driver key
-    truncates it to a Scan ExistingRDD.
+) -> list[DataFrame]:
+    """The six kNN paths of s1 (brute, srp16, ivf16, pq8x16, pq_rerank,
+    ivfpq), untagged, in ``_KNN_TAGS`` order, each shaped (query_id,
+    vec_id, score, rank).
 
     ``index``: pre-trained quantizer tables (``ensure_knn_indexes``
     shape).  Defaults to the train-once cache — the bench's timed reps
@@ -287,33 +373,25 @@ def knn_union(
         )
     )
 
-    def tag(df: DataFrame, t: str, score_col: str) -> DataFrame:
+    def shape(df: DataFrame, score_col: str = "cosine") -> DataFrame:
         return df.select(
-            F.lit(t).alias("variant"),
-            "query_id",
-            "vec_id",
-            F.col(score_col).alias("score"),
-            "rank",
+            "query_id", "vec_id", F.col(score_col).alias("score"), "rank"
         )
 
-    brute = tag(S.knn_bruteforce(emb, qdf, k=10), "brute", "cosine")
-    srp = tag(S.knn_srp(emb, qdf, k=10, num_planes=16, chunks=4), "srp16", "cosine")
-    ivf = tag(S.knn_ivf(emb, qdf, k=10, n_lists=16, nprobe=4), "ivf16", "cosine")
+    brute = shape(S.knn_bruteforce(emb, qdf, k=10))
+    srp = shape(S.knn_srp(emb, qdf, k=10, num_planes=16, chunks=4))
+    ivf = shape(S.knn_ivf(emb, qdf, k=10, n_lists=16, nprobe=4))
     book = index["pq_book"]
     pq_landed = index.get("pq_codes")
-    pq = tag(
-        S.knn_pq_adc(emb, qdf, book, k=10, m=8, code_rows=pq_landed),
-        "pq8x16",
-        "adc_dist",
+    pq = shape(
+        S.knn_pq_adc(emb, qdf, book, k=10, m=8, code_rows=pq_landed), "adc_dist"
     )
     # the PRODUCTION PQ config: ADC candidate generation (top-40)
     # + exact cosine re-scoring of the survivors — the recall-0.97+
     # path recommended for serving, driver-verified alongside the
     # ADC-pure candidate generator.
-    pqr = tag(
-        S.knn_pq_adc(emb, qdf, book, k=10, m=8, rerank=40, code_rows=pq_landed),
-        "pq_rerank",
-        "cosine",
+    pqr = shape(
+        S.knn_pq_adc(emb, qdf, book, k=10, m=8, rerank=40, code_rows=pq_landed)
     )
     # the COMPOSED production index (Jégou IVF-PQ): trained coarse
     # quantizer + PQ codebook on residuals, nprobe=8/16 list pruning
@@ -322,21 +400,46 @@ def knn_union(
     # deployment runs once) — the serving joins probe the skinny code
     # store; raw vectors are touched only by the bounded rerank slice.
     cent_t, book_r = index["ivfpq_centroids"], index["ivfpq_book"]
-    ivfpq = tag(
+    ivfpq = shape(
         S.knn_ivfpq(
             emb, qdf, cent_t, book_r, k=10, nprobe=8, m=8, rerank=100,
             code_rows=index.get("ivfpq_codes"),
-        ),
-        "ivfpq",
-        "cosine",
+        )
     )
-    return (
-        brute.unionByName(srp)
-        .unionByName(ivf)
-        .unionByName(pq)
-        .unionByName(pqr)
-        .unionByName(ivfpq)
-    )
+    return [brute, srp, ivf, pq, pqr, ivfpq]
+
+
+def knn_with_recalls(branches: list[DataFrame]) -> DataFrame:
+    """s1's tagged union: the kNN ``branches`` plus the 'recall_*'
+    branches — per-query recall@10 of every approximate path against
+    the brute branch, the ANN quality claim itself (SCALING.md's
+    recall-led defaults) hash-verified by the driver."""
+    from kafkastreamsinteractivequeries_spark.operators import similarity as S
+
+    brute = branches[0]
+    recalls = [
+        S.recall_at_k_per_query(brute, approx, k=10).select(
+            "query_id",
+            F.lit(-1).cast("long").alias("vec_id"),
+            F.col("recall").alias("score"),
+            F.lit(-1).cast("int").alias("rank"),
+        )
+        for approx in branches[1:]
+    ]
+    return tagged_union("s1_knn", *branches, *recalls)
+
+
+def knn_union(
+    s: SparkSession, d: str, index: dict[str, DataFrame] | None = None
+) -> DataFrame:
+    """The s1 union BEFORE the per-branch localCheckpoint pins `_s1`
+    adds.  Module-level so the plan-contract tests
+    (`test_knn_union_no_corpus_shuffle`,
+    `test_pq_adc_stays_columnar_with_broadcast_codebook`) can audit the
+    full kNN lineage — the checkpoint boundary in the driver key
+    truncates it to a Scan ExistingRDD.  ``index``: see
+    ``knn_branches``."""
+    return knn_with_recalls(knn_branches(s, d, index))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -382,9 +485,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "number_shares": ["sum"],
         }
 
-        def day_rows(tag: str, partials: DataFrame) -> DataFrame:
+        def day_rows(partials: DataFrame) -> DataFrame:
             return partials.select(
-                F.lit(tag).alias("variant"),
                 "symbol",
                 F.date_format("bucket", "yyyy-MM-dd").alias("bucket"),
                 F.round(F.col("buy_amt_sum").cast("double"), 2).alias("buys"),
@@ -401,7 +503,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .alias("_micros"),
                 F.col("_n"),
             ).select(
-                "variant",
                 "symbol",
                 "bucket",
                 "buys",
@@ -411,7 +512,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
 
         agg = _serving(s, d).select(
-            F.lit("agg").alias("variant"),
             "symbol",
             F.lit("all").alias("bucket"),
             "buys",
@@ -420,10 +520,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit(-1.0).alias("metric"),
         )
         daily = day_rows(
-            "daily", R.partial_aggregate(txns, ["symbol"], "event_time", "day", measures)
+            R.partial_aggregate(txns, ["symbol"], "event_time", "day", measures)
         )
         rolled = day_rows(
-            "rolled",
             R.merge_partials(
                 R.partial_aggregate(txns, ["symbol"], "event_time", "hour", measures),
                 ["symbol"],
@@ -439,7 +538,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         hll = SK.hll_estimate(
             R.merge_hll_registers(regs_hour, ["event_type"]), ["event_type"], p=6
         ).select(
-            F.lit("hllmerge").alias("variant"),
             F.col("event_type").alias("symbol"),
             F.lit("all").alias("bucket"),
             F.lit(-1.0).alias("buys"),
@@ -447,7 +545,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("nonzero_buckets").cast("long").alias("number_shares"),
             F.col("distinct_estimate").alias("metric"),
         )
-        return agg.unionByName(daily).unionByName(rolled).unionByName(hll)
+        return tagged_union("t5_stock_aggregation", agg, daily, rolled, hll)
 
     q["t5_stock_aggregation"] = _t5
 
@@ -464,16 +562,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # every variant verified (no-bounds = q6 below).
     def _q3(s: SparkSession, d: str) -> DataFrame:
         svc = _service(s, d)
-        variants = [
-            ("both", RangeQuery.with_range("click", "signup")),
-            ("lower_only", RangeQuery.with_lower_bound("error")),
-            ("upper_only", RangeQuery.with_upper_bound("purchase")),
-        ]
-        out = None
-        for tag, rq in variants:
-            part = svc.execute(rq).select(F.lit(tag).alias("variant"), "*")
-            out = part if out is None else out.unionByName(part)
-        return out
+        return tagged_union(
+            "q3_range_query",
+            svc.execute(RangeQuery.with_range("click", "signup")),
+            svc.execute(RangeQuery.with_lower_bound("error")),
+            svc.execute(RangeQuery.with_upper_bound("purchase")),
+        )
 
     q["q3_range_query"] = _q3
 
@@ -487,31 +581,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tagged union.
     def _q4(s: SparkSession, d: str) -> DataFrame:
         svc = _service(s, d)
-        variants = [
-            (
-                "buys_gt_sells",
+        return tagged_union(
+            "q4_filtered_range",
+            svc.execute(
                 FilteredRangeQuery.with_bounds("click", "view").predicate(
                     "@.buys > @.sells"
-                ),
+                )
             ),
-            (
-                "symbol_eq",
+            svc.execute(
                 FilteredRangeQuery.with_bounds(None, None).predicate(
                     "@.symbol == 'purchase'"
-                ),
+                )
             ),
-            (
-                "numeric_and",
+            svc.execute(
                 FilteredRangeQuery.with_bounds(None, None).predicate(
                     "@.buys > 299 && @.number_shares > 100"
-                ),
+                )
             ),
-        ]
-        out = None
-        for tag, fq in variants:
-            part = svc.execute(fq).select(F.lit(tag).alias("variant"), "*")
-            out = part if out is None else out.unionByName(part)
-        return out
+        )
 
     q["q4_filtered_range"] = _q4
 
@@ -557,13 +644,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.round("sells", 2).alias("sells"),
             "number_shares",
         )
-        return (
-            w.select(F.lit("window_all").alias("variant"), "*")
-            .unionByName(
-                query.apply(w).select(F.lit("filtered_range").alias("variant"), "*")
-            )
-            .unionByName(hop.select(F.lit("hopping").alias("variant"), "*"))
-        )
+        return tagged_union("q5_filtered_window_range", w, query.apply(w), hop)
 
     q["q5_filtered_window_range"] = _q5
 
@@ -612,19 +693,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _a6(s: SparkSession, d: str) -> DataFrame:
         ev = load_table(s, d, "events")
 
-        def tagged(tag: str, **kw) -> DataFrame:
-            return (
-                A.purchase_click_attribution(ev, **kw)
-                .filter(F.col("click_event_id").isNotNull())
-                .select(F.lit(tag).alias("variant"), "*")
+        def matched(**kw) -> DataFrame:
+            return A.purchase_click_attribution(ev, **kw).filter(
+                F.col("click_event_id").isNotNull()
             )
 
-        return (
-            tagged("bwd", direction="backward")
-            .unionByName(tagged("fwd", direction="forward"))
-            .unionByName(
-                tagged("bwdtol", direction="backward", tolerance_seconds=3600.0)
-            )
+        return tagged_union(
+            "a6_asof_purchase_click",
+            matched(direction="backward"),
+            matched(direction="forward"),
+            matched(direction="backward", tolerance_seconds=3600.0),
         )
 
     q["a6_asof_purchase_click"] = _a6
@@ -662,13 +740,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         NOAUX = F.lit(None).cast("double").alias("aux")
         li, pt = load_table(s, d, "lineitem"), load_table(s, d, "part")
         promo = A.promo_revenue_ratio(li, pt, "1995-01-01", "1996-12-31").select(
-            F.lit("promo_ratio").alias("variant"),
             NODIM,
             F.col("promo_revenue_pct").alias("value"),
             F.col("total_revenue").alias("aux"),
         )
         disj = A.disjunctive_part_revenue(li, pt).select(
-            F.lit("disjunctive").alias("variant"),
             NODIM,
             F.col("revenue").alias("value"),
             F.col("n_lines").cast("double").alias("aux"),
@@ -679,7 +755,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # CORRELATED form, proving the rewrite semantics-preserving.
         ords = load_table(s, d, "orders")
         q21 = A.waiting_suppliers(li, ords).select(
-            F.lit("q21").alias("variant"),
             NODIM,
             F.col("s_suppkey").cast("double").alias("value"),
             F.col("numwait").cast("double").alias("aux"),
@@ -691,13 +766,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             eager=False
         )
         q22cnt = q22.select(
-            F.lit("q22cnt").alias("variant"),
             NODIM,
             F.col("c_nationkey").cast("double").alias("value"),
             F.col("numcust").cast("double").alias("aux"),
         )
         q22bal = q22.select(
-            F.lit("q22bal").alias("variant"),
             NODIM,
             F.col("c_nationkey").cast("double").alias("value"),
             F.col("totacctbal").alias("aux"),
@@ -706,7 +779,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # de-correlated into one brand-slice aggregate joined back by
         # broadcast; oracle runs the textbook correlated form.
         q17 = A.small_quantity_revenue(li, pt).select(
-            F.lit("q17").alias("variant"),
             NODIM,
             F.col("avg_yearly").alias("value"),
             F.col("n_lines").alias("aux"),
@@ -716,7 +788,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 1-row broadcast, equality row-local.
         sup = load_table(s, d, "supplier")
         q15 = A.top_revenue_supplier(li, sup).select(
-            F.lit("q15").alias("variant"),
             NODIM,
             F.col("s_suppkey").cast("double").alias("value"),
             F.col("total_revenue").alias("aux"),
@@ -727,70 +798,59 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         nat = load_table(s, d, "nation")
         reg = load_table(s, d, "region")
         q6 = A.forecast_revenue(li).select(
-            F.lit("q6").alias("variant"),
             NODIM,
             F.col("revenue").alias("value"),
             F.col("n_lines").alias("aux"),
         )
         q7 = A.nation_pair_volume(li, ords, cust, sup, nat).select(
-            F.lit("q7").alias("variant"),
             F.concat_ws("|", "supp_nation", "cust_nation", "l_year").alias("dim"),
             F.col("revenue").alias("value"),
             F.col("n_lines").alias("aux"),
         )
         q8 = A.market_share(li, ords, cust, sup, nat, reg, pt).select(
-            F.lit("q8").alias("variant"),
             F.col("o_year").cast("string").alias("dim"),
             F.col("mkt_share").alias("value"),
             F.col("total_volume").alias("aux"),
         )
         q9 = A.product_profit(li, pt, sup, nat).select(
-            F.lit("q9").alias("variant"),
             F.concat_ws("|", "nation", "o_year").alias("dim"),
             F.col("profit").alias("value"),
             NOAUX,
         )
         q13 = A.customer_order_distribution(cust, ords).select(
-            F.lit("q13").alias("variant"),
             NODIM,
             F.col("c_count").alias("value"),
             F.col("custdist").alias("aux"),
         )
         q18 = A.large_quantity_orders(li, ords).select(
-            F.lit("q18").alias("variant"),
             F.col("o_custkey").cast("string").alias("dim"),
             F.col("o_orderkey").cast("double").alias("value"),
             F.col("total_qty").alias("aux"),
         )
         q2 = A.min_cost_supplier(li, pt, sup).select(
-            F.lit("q2").alias("variant"),
             F.col("s_name").alias("dim"),
             F.col("p_partkey").cast("double").alias("value"),
             F.col("unit_cost").alias("aux"),
         )
         q11 = A.important_parts(li).select(
-            F.lit("q11").alias("variant"),
             NODIM,
             F.col("l_partkey").alias("value"),
             F.col("part_value").alias("aux"),
         )
         q16 = A.supplier_part_counts(li, pt, sup).select(
-            F.lit("q16").alias("variant"),
             F.col("brand_type").alias("dim"),
             F.col("p_size").alias("value"),
             F.col("supplier_cnt").alias("aux"),
         )
         q20 = A.dominant_suppliers(li, pt, sup).select(
-            F.lit("q20").alias("variant"),
             F.col("s_name").alias("dim"),
             F.col("s_suppkey").alias("value"),
             NOAUX,
         )
-        out = promo
-        for br in (q21, q22cnt, q22bal, q17, q15, q6, q7, q8, q9,
-                   q13, q18, q2, q11, q16, q20, disj):
-            out = out.unionByName(br)
-        return out
+        return tagged_union(
+            "a11_revenue_kpis", promo, q21, q22cnt, q22bal, q17, q15, q6, q7,
+            q8, q9, q13, q18, q2, q11, q16, q20, disj,
+        )
 
     q["a11_revenue_kpis"] = _a11
 
@@ -810,14 +870,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _d1(s: SparkSession, d: str) -> DataFrame:
         docs = _docs(s, d)
         kept = D.exact_dedup(docs).select(
-            F.lit("dedup").alias("variant"),
             "doc_id",
             "text",
             F.concat_ws("|", "lang", "source").alias("info"),
             F.col("n_chars").cast("long").alias("n"),
         )
         groups = D.exact_duplicate_groups(docs).select(
-            F.lit("groups").alias("variant"),
             F.col("keep_id").alias("doc_id"),
             F.col("fingerprint").alias("text"),
             F.lit("").alias("info"),
@@ -834,7 +892,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         inc = D.exact_dedup_incremental(
             docs.filter(F.col("doc_id") % 2 == 1), landed_fp
         ).select(
-            F.lit("incremental").alias("variant"),
             "doc_id",
             "text",
             F.concat_ws("|", "lang", "source").alias("info"),
@@ -846,7 +903,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # back without re-shuffling the corpus.  Same survivor set as
         # 'dedup', verified through the payload-free operator path.
         ids = D.exact_dedup_ids(docs).select(
-            F.lit("ids").alias("variant"),
             "doc_id",
             F.lit("").alias("text"),
             F.lit("").alias("info"),
@@ -906,7 +962,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .localCheckpoint(eager=False)
         )
         urls = D.url_dedup(canon, canonical_col="canonical_url").select(
-            F.lit("url").alias("variant"),
             "doc_id",
             F.col("canonical_url").alias("text"),
             F.col("url").alias("info"),
@@ -925,7 +980,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             host_col="host",
             canonical_col="canonical_url",
         ).select(
-            F.lit("host").alias("variant"),
             F.col("first_id").alias("doc_id"),
             F.col("host").alias("text"),
             F.concat(
@@ -994,7 +1048,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         robots = D.robots_allowed(
             url_src, D.robots_rules(robots_src, agent="ksiqbot")
         ).select(
-            F.lit("robots").alias("variant"),
             (
                 F.regexp_extract("host", r"h(\d+)\.com", 1).cast("long") * 100
                 + F.regexp_extract("path", r"/p(\d+)", 1).cast("long")
@@ -1048,14 +1101,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.posexplode(D.sitemap_urls_col(smap_xml)).alias("i", "url"),
         )
         smap = smap_decls.select(
-            F.lit("sitemap").alias("variant"),
             (hn_ * 100 + F.col("i")).cast("long").alias("doc_id"),
             F.concat(F.lit("h"), hn_s, F.lit(".com")).alias("text"),
             F.col("url").alias("info"),
             F.lit(0).cast("long").alias("n"),
         ).unionByName(
             smap_locs.select(
-                F.lit("sitemap").alias("variant"),
                 (hn_ * 100 + 10 + F.col("i")).cast("long").alias("doc_id"),
                 F.concat(F.lit("h"), hn_s, F.lit(".com")).alias("text"),
                 F.col("url").alias("info"),
@@ -1086,7 +1137,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             P.dedup_preference_pairs(pairs)
             .join(P.preference_pair_stats(pairs), "pair_id")
             .select(
-                F.lit("pref").alias("variant"),
                 F.col("pair_id").alias("doc_id"),
                 F.col("fingerprint").alias("text"),
                 F.concat_ws(
@@ -1099,15 +1149,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("n_dups").alias("n"),
             )
         )
-        return (
-            kept.unionByName(groups)
-            .unionByName(inc)
-            .unionByName(ids)
-            .unionByName(urls)
-            .unionByName(hosts)
-            .unionByName(robots)
-            .unionByName(smap)
-            .unionByName(pref)
+        return tagged_union(
+            "d1_exact_dedup", kept, groups, inc, ids, urls, hosts, robots, smap, pref,
         )
 
     q["d1_exact_dedup"] = _d1
@@ -1136,7 +1179,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             docs, shingle_n=1, threshold=0.6
         ).localCheckpoint(eager=False)
         lsh = base.select(
-            F.lit("lsh").alias("variant"),
             "id_a",
             "id_b",
             "jaccard",
@@ -1147,10 +1189,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "embeddings"),
             cosine_threshold=0.3,
             pairs=base,
-        ).select(
-            F.lit("hybrid").alias("variant"), "id_a", "id_b", "jaccard", "cosine"
-        )
-        return lsh.unionByName(hyb)
+        ).select("id_a", "id_b", "jaccard", "cosine")
+        return tagged_union("d5_minhash_near_duplicates", lsh, hyb)
 
     q["d5_minhash_near_duplicates"] = _d5
     # d6: the exact-audit pair suite as a tagged union — 'jaccard' is
@@ -1178,7 +1218,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             threshold=0.01,
         ).localCheckpoint(eager=False)
         jrows = jac.select(
-            F.lit("jaccard").alias("variant"),
             "id_a",
             "id_b",
             F.col("jaccard").alias("score"),
@@ -1186,12 +1225,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         erows = D.edit_distance_pairs(
             jac.filter(F.col("jaccard") >= 0.2), docs
         ).select(
-            F.lit("edit").alias("variant"),
             "id_a",
             "id_b",
             F.col("edit_sim").alias("score"),
         )
-        return jrows.unionByName(erows)
+        return tagged_union("d6_ngram_jaccard_pairs", jrows, erows)
 
     q["d6_ngram_jaccard_pairs"] = _d6
     # d7 ⊕ d8 in ONE tagged union: the 64-bit signature table ('sig',
@@ -1206,20 +1244,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # materialized parent).
         sigs = D.simhash_signatures(docs).localCheckpoint(eager=False)
         sig = sigs.select(
-            F.lit("sig").alias("variant"),
             F.col("doc_id").alias("id_a"),
             F.col("doc_id").alias("id_b"),
             F.col("simhash").alias("detail"),
             F.lit(-1).alias("hamming"),
         )
         pairs = D.hamming_near_duplicates(sigs, max_hamming=6).select(
-            F.lit("pairs").alias("variant"),
             "id_a",
             "id_b",
             F.lit("").alias("detail"),
             "hamming",
         )
-        return sig.unionByName(pairs)
+        return tagged_union("d7_simhash", sig, pairs)
 
     q["d7_simhash"] = _d7
     # The detector that isolates the corpus's injected duplicates:
@@ -1256,12 +1292,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = _docs(s, d)
         docmin = T.winnowing_fingerprint(docs).select(
-            F.lit("docmin").alias("variant"),
             "doc_id",
             F.col("winnow_fp").alias("fp"),
         )
         full = T.winnowing_fingerprints_full(docs, k=5, window=4).select(
-            F.lit("full").alias("variant"),
             "doc_id",
             F.col("fingerprint").alias("fp"),
         )
@@ -1274,12 +1308,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             eager=False
         )
         spans = occ.select(
-            F.lit("dupspan").alias("variant"),
             "doc_id",
             F.concat_ws(":", "gram", "pos").alias("fp"),
         )
         frac = DD.duplicate_span_stats(docs, k=8, occurrences=occ).select(
-            F.lit("dupfrac").alias("variant"),
             "doc_id",
             F.format_string(
                 "%d:%d:%d:%.6f",
@@ -1292,7 +1324,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 'trimmed': the REMEDIATION step — every doc with its repeated
         # spans excised, verified as removed-count:md5(trimmed text).
         trimmed = DD.remove_duplicate_spans(docs, k=8, occurrences=occ).select(
-            F.lit("trimmed").alias("variant"),
             "doc_id",
             F.concat_ws(
                 ":", "removed_tokens", F.md5("trimmed_text")
@@ -1323,7 +1354,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("text"),
         )
         ld = DD.line_dedup(lined).select(
-            F.lit("linededup").alias("variant"),
             "doc_id",
             F.format_string(
                 "%d:%d:%d:%s",
@@ -1339,7 +1369,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # chunk hashes (the rsync/LBFS invariance); every chunk row
         # carries its corpus-wide occurrence count and keeper flag.
         cdc = DD.cdc_chunk_dedup(docs, window=4, divisor=8).select(
-            F.lit("cdc").alias("variant"),
             "doc_id",
             F.format_string(
                 "%d:%d:%d:%s:%d:%d",
@@ -1412,7 +1441,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("text"),
         )
         codespdx = CC.spdx_license_headers(cfx).select(
-            F.lit("codespdx").alias("variant"),
             "doc_id",
             F.concat_ws(
                 "|",
@@ -1424,7 +1452,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("fp"),
         )
         codestrip = CC.strip_code_comments(cfx).select(
-            F.lit("codestrip").alias("variant"),
             "doc_id",
             F.format_string(
                 "%d:%d:%s",
@@ -1434,7 +1461,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("fp"),
         )
         codenorm = cfx.select(
-            F.lit("codenorm").alias("variant"),
             "doc_id",
             F.md5(CC.normalized_code_col(F.col("text"))).alias("fp"),
         )
@@ -1443,14 +1469,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             (F.col("doc_id") * 10 + F.col("fn_idx")).alias("cid"), "chunk"
         ).localCheckpoint(eager=False)
         codefn = cchunks.select(
-            F.lit("codefn").alias("variant"),
             F.col("cid").alias("doc_id"),
             F.md5(CC.normalized_code_col(F.col("chunk"))).alias("fp"),
         )
         codeclone = CC.code_clone_groups(
             cchunks, text_col="chunk", id_col="cid"
         ).select(
-            F.lit("codeclone").alias("variant"),
             F.col("keep_id").alias("doc_id"),
             F.concat_ws(
                 ":", "clone_fp", F.col("n_members").cast("string")
@@ -1464,23 +1488,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             text_col="chunk",
             id_col="cid",
         ).select(
-            F.lit("codenear").alias("variant"),
             F.col("id_a").alias("doc_id"),
             F.format_string("%d:%.6f", "id_b", "jaccard").alias("fp"),
         )
-        return (
-            docmin.unionByName(full)
-            .unionByName(spans)
-            .unionByName(frac)
-            .unionByName(trimmed)
-            .unionByName(ld)
-            .unionByName(cdc)
-            .unionByName(codespdx)
-            .unionByName(codestrip)
-            .unionByName(codenorm)
-            .unionByName(codefn)
-            .unionByName(codeclone)
-            .unionByName(codenear)
+        return tagged_union(
+            "x4_winnowing_fingerprint", docmin, full, spans, frac, trimmed, ld, cdc,
+            codespdx, codestrip, codenorm, codefn, codeclone, codenear,
         )
 
     q["x4_winnowing_fingerprint"] = _x4
@@ -1542,7 +1555,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ])
             ).alias("m")
         ).select(
-            F.lit("length").alias("variant"),
             F.col("m.name").alias("name"),
             F.col("m.value").alias("value"),
             sent.alias("n"),
@@ -1570,7 +1582,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         qsk = hashed_quantile_estimates(
             hashed_quantile_sketch(lens, "v", k=256), (25, 50, 75, 90)
         ).select(
-            F.lit("qsketch").alias("variant"),
             F.concat(F.lit("p"), F.col("percentile").cast("string")).alias(
                 "name"
             ),
@@ -1632,7 +1643,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             StreamingQuantileSketchSink(qstream_store, "v", k=256).sketch(s),
             (25, 50, 75, 90),
         ).select(
-            F.lit("qstream").alias("variant"),
             F.concat(F.lit("p"), F.col("percentile").cast("string")).alias(
                 "name"
             ),
@@ -1660,7 +1670,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             eager=False
         )
         cons = cons_rep.select(
-            F.lit("constraint").alias("variant"),
             F.concat_ws(":", "rule", "column").alias("name"),
             F.col("passed").cast("double").alias("value"),
             F.col("violations").cast("long").alias("n"),
@@ -1668,7 +1677,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         li = load_table(s, d, "lineitem")
         skew = A.skew_report(li, ["l_suppkey"], top_k=20).select(
-            F.lit("skew").alias("variant"),
             F.col("l_suppkey").cast("string").alias("name"),
             F.col("share").alias("value"),
             F.col("n_rows").cast("long").alias("n"),
@@ -1696,7 +1704,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.count("*").alias("n_items"),
             )
             .select(
-                F.lit("salted").alias("variant"),
                 F.col("s_nationkey").cast("string").alias("name"),
                 F.col("revenue").alias("value"),
                 F.col("n_items").cast("long").alias("n"),
@@ -1769,7 +1776,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("doc_id", F.lit(1).alias("sel"))
         )
         dsir = w.join(F.broadcast(top), "doc_id", "left").select(
-            F.lit("dsir").alias("variant"),
             F.col("doc_id").cast("string").alias("name"),
             F.col("log_weight").alias("value"),
             F.col("n_grams").cast("long").alias("n"),
@@ -1801,7 +1807,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ),
         )
         qlrw = model.select(
-            F.lit("qlrw").alias("variant"),
             F.col("bucket").cast("string").alias("name"),
             F.col("w").alias("value"),
             sent.alias("n"),
@@ -1813,7 +1818,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .join(ydocs.select("doc_id", "_y"), "doc_id")
             .select(
-                F.lit("qlr").alias("variant"),
                 F.col("doc_id").cast("string").alias("name"),
                 # hash-verify the LOGIT, not the sigmoid: score is pure
                 # +/*/round IEEE arithmetic so both engines agree to the
@@ -1847,14 +1851,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             docs, ["dup", "legacy"]
         ).localCheckpoint(eager=False)
         gop = sig_tbl.select(
-            F.lit("gopher").alias("variant"),
             F.col("doc_id").cast("string").alias("name"),
             F.col("failure_mask").cast("double").alias("value"),
             F.col("word_count").alias("n"),
             F.col("gopher_passed").cast("long").alias("total"),
         )
         bl = sig_tbl.select(
-            F.lit("blocklist").alias("variant"),
             F.col("doc_id").cast("string").alias("name"),
             F.col("blocked_frac").alias("value"),
             F.col("n_blocked").alias("n"),
@@ -1894,7 +1896,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     .cast("long")
                     .alias("n")
                 ).select(
-                    F.lit("gate").alias("variant"),
                     F.lit(tag).alias("name"),
                     F.when(F.col("n") > 0, 1.0).otherwise(0.0).alias("value"),
                     F.col("n"),
@@ -1937,7 +1938,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("text"),
         )
         html = T.html_markup_stats(wrapped).select(
-            F.lit("html").alias("variant"),
             F.concat_ws(
                 ":",
                 F.col("doc_id").cast("string"),
@@ -1971,7 +1971,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         mrep = T.repair_mojibake_col(mraw)
         moji = docs.filter(mdid % 5 == 0).select(
-            F.lit("mojibake").alias("variant"),
             F.concat_ws(
                 ":",
                 mdid.cast("string"),
@@ -2009,7 +2008,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         nfc = T.normalize_nfc_arrow(
             docs.filter(mdid % 7 == 0).select("doc_id", nraw.alias("text"))
         ).select(
-            F.lit("nfc").alias("variant"),
             F.concat_ws(
                 ":",
                 F.col("doc_id").cast("string"),
@@ -2028,7 +2026,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # bits (gopher=1, blocklist=2) — offline threshold tuning
         # reads THIS table instead of re-scanning the corpus.
         sig = sig_tbl.select(
-            F.lit("signals").alias("variant"),
             F.format_string(
                 "%d:%d:%.6f:%.6f:%.6f:%d",
                 "doc_id",
@@ -2044,22 +2041,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .cast("long")
             .alias("total"),
         )
-        return (
-            length_rows.unionByName(cons)
-            .unionByName(skew)
-            .unionByName(salted)
-            .unionByName(dsir)
-            .unionByName(qlrw)
-            .unionByName(qlr)
-            .unionByName(gop)
-            .unionByName(bl)
-            .unionByName(sig)
-            .unionByName(gate)
-            .unionByName(html)
-            .unionByName(moji)
-            .unionByName(nfc)
-            .unionByName(qsk)
-            .unionByName(qst)
+        return tagged_union(
+            "x6_quality_gates", length_rows, cons, skew, salted, dsir, qlrw, qlr, gop,
+            bl, sig, gate, html, moji, nfc, qsk, qst,
         )
 
     q["x6_quality_gates"] = _x6
@@ -2088,14 +2072,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(s, d), tokens_df=x7_toks
         ).localCheckpoint(eager=True)
         score = sc.select(
-            F.lit("score").alias("variant"),
             "doc_id",
             "n_bigrams",
             F.col("avg_logprob").alias("score"),
             F.lit("").alias("bucket"),
         )
         cc = T.perplexity_buckets(_docs(s, d), scores=sc).select(
-            F.lit("ccnet").alias("variant"),
             "doc_id",
             "n_bigrams",
             F.col("ppl").alias("score"),
@@ -2109,13 +2091,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         kn = T.kneser_ney_trigram_scores(
             _docs(s, d), tokens_df=x7_toks
         ).select(
-            F.lit("kn3").alias("variant"),
             "doc_id",
             F.col("n_trigrams").alias("n_bigrams"),
             F.col("avg_p_micro").cast("double").alias("score"),
             F.col("sum_p_micro").cast("string").alias("bucket"),
         )
-        return score.unionByName(cc).unionByName(kn)
+        return tagged_union("x7_bigram_logprob", score, cc, kn)
 
     q["x7_bigram_logprob"] = _x7
     q["x8_repetition_stats"] = lambda s, d: T.repetition_stats(_docs(s, d))
@@ -2126,7 +2107,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _x9(s: SparkSession, d: str) -> DataFrame:
         docs = _docs(s, d)
         tfidf = T.tfidf_top_terms(docs, k=3).select(
-            F.lit("tfidf").alias("variant"),
             "doc_id",
             "term",
             F.col("tfidf").cast("double").alias("score"),
@@ -2135,7 +2115,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         qterms = ["spark", "vector", "hash"]
         bm = T.bm25_search(docs, qterms, k=10)
         bm25 = bm.select(
-            F.lit("bm25").alias("variant"),
             "doc_id",
             F.lit(" ".join(qterms)).alias("term"),
             F.col("bm25").cast("double").alias("score"),
@@ -2162,13 +2141,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         fused = reciprocal_rank_fusion(
             [bm.select("doc_id", "rank"), vec], k=10
         ).select(
-            F.lit("rrf").alias("variant"),
             "doc_id",
             F.lit(" ".join(qterms)).alias("term"),
             F.col("rrf").cast("double").alias("score"),
             "rank",
         )
-        return tfidf.unionByName(bm25).unionByName(fused)
+        return tagged_union("x9_term_relevance", tfidf, bm25, fused)
 
     q["x9_term_relevance"] = _x9
     # x11 — the tokenizer-building suite in ONE tagged union: top-k
@@ -2181,7 +2159,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _x11(s: SparkSession, d: str) -> DataFrame:
         docs = _docs(s, d)
         vocab = T.vocabulary_coverage(docs, top_k=50).select(
-            F.lit("vocab").alias("variant"),
             F.col("token").alias("term"),
             F.col("count").cast("long").alias("n"),
             F.col("rank").cast("long").alias("rank"),
@@ -2199,7 +2176,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         bpe = s.createDataFrame(
             traj, "step long, left string, right string, n long"
         ).select(
-            F.lit("bpe").alias("variant"),
             F.concat_ws(" ", "left", "right").alias("term"),
             F.col("n"),
             F.col("step").alias("rank"),
@@ -2256,7 +2232,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # this branch's own oracle replay), so re-running the unrolled
         # fold chain over the corpus per build bought nothing.
         seg = sega_raw.select(
-            F.lit("segment").alias("variant"),
             F.concat_ws(" ", "bpe_tokens_learned").alias("term"),
             F.col("n_bpe_tokens").cast("long").alias("n"),
             F.col("doc_id").cast("long").alias("rank"),
@@ -2266,7 +2241,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # mapInPandas): same learned merges, hash-verified against the
         # same oracle replay as 'segment'.
         sega = sega_raw.select(
-            F.lit("segmenta").alias("variant"),
             F.concat_ws(" ", "bpe_tokens_learned").alias("term"),
             F.col("n_bpe_tokens").cast("long").alias("n"),
             F.col("doc_id").cast("long").alias("rank"),
@@ -2285,14 +2259,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # padded tensor position.  rank = doc_id for tokids,
         # shard·10⁶ + bin_id for tokbin; share = n_docs in the bin.
         tokvocab = tvoc_df.select(
-            F.lit("tokvocab").alias("variant"),
             F.col("piece").alias("term"),
             F.col("count").alias("n"),
             F.col("token_id").cast("long").alias("rank"),
             F.lit(-1.0).alias("share"),
         )
         tokids = ids_df.select(
-            F.lit("tokids").alias("variant"),
             F.array_join(
                 F.col("token_ids").cast("array<string>"), " "
             ).alias("term"),
@@ -2351,7 +2323,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tokstream = StreamingTokenIdSink(
             tokstream_store, merges, vmap
         ).token_ids(s).select(
-            F.lit("tokstream").alias("variant"),
             F.array_join(
                 F.col("token_ids").cast("array<string>"), " "
             ).alias("term"),
@@ -2448,7 +2419,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ids_col="token_ids",
             mask_col="loss_mask",
         ).select(
-            F.lit("sftbin").alias("variant"),
             F.concat_ws(
                 " | ",
                 F.array_join(F.col("input_ids").cast("array<string>"), " "),
@@ -2471,7 +2441,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the same bins (training.packing_stats): term = shard:n_trunc,
         # n = total real tokens, rank = n_bins, share = fill permille.
         tokstats = TRN.packing_stats(bins_df, 512).select(
-            F.lit("tokstats").alias("variant"),
             F.concat_ws(
                 ":",
                 F.col("shard").cast("string"),
@@ -2483,7 +2452,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("fill_permille").cast("double").alias("share"),
         )
         tokbin = bins_df.select(
-            F.lit("tokbin").alias("variant"),
             F.concat_ws(
                 " | ",
                 F.array_join(F.col("input_ids").cast("array<string>"), " "),
@@ -2513,7 +2481,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ),
         )
         wpvocab = wpv.select(
-            F.lit("wpvocab").alias("variant"),
             F.when(F.col("is_cont") == 1, F.concat(F.lit("##"), "piece"))
             .otherwise(F.col("piece"))
             .alias("term"),
@@ -2532,7 +2499,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             [r["piece"] for r in vrows if r["is_cont"] == 0],
             [r["piece"] for r in vrows if r["is_cont"] == 1],
         ).select(
-            F.lit("wordpiece").alias("variant"),
             F.concat_ws(" ", "wp_tokens").alias("term"),
             F.col("n_wp_tokens").cast("long").alias("n"),
             F.col("doc_id").cast("long").alias("rank"),
@@ -2556,33 +2522,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         uvocab = s.createDataFrame(
             uvoc, "piece string, cnt long, cost long, urank long"
         ).select(
-            F.lit("uvocab").alias("variant"),
             F.col("piece").alias("term"),
             F.col("cnt").alias("n"),
             F.col("urank").alias("rank"),
             F.col("cost").cast("double").alias("share"),
         )
         useg = T.unigram_segment_arrow(nonempty, uvoc, max_piece_len=4).select(
-            F.lit("unigram").alias("variant"),
             F.concat_ws(" ", "u_tokens").alias("term"),
             F.col("n_u_tokens").cast("long").alias("n"),
             F.col("doc_id").cast("long").alias("rank"),
             F.lit(-1.0).alias("share"),
         )
-        return (
-            vocab.unionByName(bpe)
-            .unionByName(seg)
-            .unionByName(sega)
-            .unionByName(tokvocab)
-            .unionByName(tokids)
-            .unionByName(tokstream)
-            .unionByName(tokbin)
-            .unionByName(tokstats)
-            .unionByName(sftbin)
-            .unionByName(wpvocab)
-            .unionByName(wp)
-            .unionByName(uvocab)
-            .unionByName(useg)
+        return tagged_union(
+            "x11_vocab_bpe", vocab, bpe, seg, sega, tokvocab, tokids, tokstream, tokbin,
+            tokstats, sftbin, wpvocab, wp, uvocab, useg,
         )
 
     q["x11_vocab_bpe"] = _x11
@@ -2599,13 +2552,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _x10(s: SparkSession, d: str) -> DataFrame:
         ev = load_table(s, d, "events")
         kmv = SK.kmv_distinct_users(ev, k=32).select(
-            F.lit("kmv").alias("variant"),
             F.col("event_type").alias("sketch_key"),
             F.col("distinct_estimate").cast("double").alias("estimate"),
             F.col("kth_hash").cast("long").alias("detail"),
         )
         hll = SK.hll_distinct(ev, "user_id", ["event_type"], p=6).select(
-            F.lit("hll").alias("variant"),
             F.col("event_type").alias("sketch_key"),
             F.col("distinct_estimate").cast("double").alias("estimate"),
             F.col("nonzero_buckets").cast("long").alias("detail"),
@@ -2654,7 +2605,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         hllstream = StreamingHllSink(
             hllstream_store, "user_id", ["event_type"], p=6
         ).estimates(s).select(
-            F.lit("hllstream").alias("variant"),
             F.col("event_type").alias("sketch_key"),
             F.col("distinct_estimate").cast("double").alias("estimate"),
             F.col("nonzero_buckets").cast("long").alias("detail"),
@@ -2666,7 +2616,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             SK.cms_estimate(counters, probes, "user_id", depth=4, width=1024)
             .join(exact, "user_id")
             .select(
-                F.lit("cms").alias("variant"),
                 F.col("user_id").cast("string").alias("sketch_key"),
                 F.col("cms_estimate").cast("double").alias("estimate"),
                 F.col("_exact").cast("long").alias("detail"),
@@ -2677,7 +2626,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pair, detail = the k-set's both-sides membership count (sketch
         # content, so the merge itself is hash-checked).
         kmvset = SK.kmv_overlap(ev, "user_id", "event_type", k=32).select(
-            F.lit("kmvset").alias("variant"),
             F.concat_ws("+", "group_a", "group_b").alias("sketch_key"),
             F.col("intersection_estimate").cast("double").alias("estimate"),
             F.col("n_both").cast("long").alias("detail"),
@@ -2722,11 +2670,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "bucket", F.col(c).alias("cnt")
             )
 
-        def _drift(tag: str, ha, hb) -> DataFrame:
+        def _drift(ha, hb) -> DataFrame:
             return T.distribution_divergence_from_histograms(
                 ha, hb, top_k=20
             ).select(
-                F.lit(tag).alias("variant"),
                 F.concat_ws(
                     ":",
                     "metric",
@@ -2737,15 +2684,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("bucket").cast("long").alias("detail"),
             )
 
-        drift_lang = _drift("drift_lang", _side("c_en"), _side("c_ren"))
-        drift_split = _drift("drift_split", _side("c_even"), _side("c_odd"))
-        return (
-            kmv.unionByName(hll)
-            .unionByName(hllstream)
-            .unionByName(cms)
-            .unionByName(kmvset)
-            .unionByName(drift_lang)
-            .unionByName(drift_split)
+        drift_lang = _drift(_side("c_en"), _side("c_ren"))
+        drift_split = _drift(_side("c_even"), _side("c_odd"))
+        return tagged_union(
+            "x10_cardinality_sketches", kmv, hll, hllstream, cms, kmvset, drift_lang,
+            drift_split,
         )
 
     q["x10_cardinality_sketches"] = _x10
@@ -2855,7 +2798,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             train, n=3, tokens_df=train_toks
         ).localCheckpoint(eager=False)
         exact = T.ngram_decontaminate(train, evald, n=3, train_grams=grams).select(
-            F.lit("exact").alias("variant"),
             "doc_id",
             F.lit(-1).cast("long").alias("partner"),
             F.col("n_contaminated_ngrams").cast("double").alias("score"),
@@ -2865,7 +2807,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         bloom = T.ngram_decontaminate_bloom(
             train, words, n=3, num_bits=1 << 20, num_hashes=4, train_grams=grams
         ).select(
-            F.lit("bloom").alias("variant"),
             "doc_id",
             F.lit(-1).cast("long").alias("partner"),
             F.col("n_contaminated_ngrams").cast("double").alias("score"),
@@ -2877,13 +2818,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             threshold=0.5,
             train_tokens=train_toks,
         ).select(
-            F.lit("fuzzy").alias("variant"),
             "doc_id",
             F.col("eval_id").cast("long").alias("partner"),
             F.col("mjaccard").alias("score"),
             F.lit(True).alias("contaminated"),
         )
-        return exact.unionByName(bloom).unionByName(fuzzy)
+        return tagged_union("x13_decontamination", exact, bloom, fuzzy)
 
     q["x13_decontamination"] = _x13
 
@@ -3013,7 +2953,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # operators (pinned by test_multimodal).
         fused = M.png_fused_features(png_assets).localCheckpoint(eager=False)
         png = fused.select(
-            F.lit("png").alias("variant"),
             "asset_id",
             F.lit(0).alias("frame_idx"),
             F.lit(1).alias("n_frames"),
@@ -3030,7 +2969,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the two-stage form shipped every payload across the worker
         # boundary twice) — row-identical, codec still really executes
         apng = M.apng_roundtrip_features(_docs(s, d)).select(
-            F.lit("apng").alias("variant"),
             "asset_id",
             "frame_idx",
             "n_frames",
@@ -3044,7 +2982,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "pixel_max",
         )
         rez = fused.select(
-            F.lit("resize").alias("variant"),
             "asset_id",
             F.lit(0).alias("frame_idx"),
             F.lit(1).alias("n_frames"),
@@ -3069,7 +3006,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 'dhash' report branch AND the 'capdup' Hamming confirm.
         dh_sigs = fused.select("asset_id", "dhash")
         dh = fused.select(
-            F.lit("dhash").alias("variant"),
             "asset_id",
             F.lit(0).alias("frame_idx"),
             F.lit(1).alias("n_frames"),
@@ -3091,7 +3027,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # resample, AND the low-frequency signature.  Same row shape
         # as 'dhash'.
         ph = fused.select(
-            F.lit("phash").alias("variant"),
             "asset_id",
             F.lit(0).alias("frame_idx"),
             F.lit(1).alias("n_frames"),
@@ -3124,7 +3059,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         gate = M.image_pair_quality_gates(
             pair_src, id_col="asset_id", px_stats=fused
         ).select(
-            F.lit("gate").alias("variant"),
             "asset_id",
             F.col("failure_mask").alias("frame_idx"),
             F.col("passed").cast("int").alias("n_frames"),
@@ -3153,7 +3087,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         capdup = M.image_caption_near_duplicates(
             pair_src, id_col="asset_id", dhash_sigs=dh_sigs
         ).select(
-            F.lit("capdup").alias("variant"),
             F.col("id_a").alias("asset_id"),
             F.col("hamming").cast("int").alias("frame_idx"),
             F.lit(-1).alias("n_frames"),
@@ -3166,13 +3099,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("id_b").cast("int").alias("pixel_min"),
             F.lit(-1).alias("pixel_max"),
         )
-        return (
-            png.unionByName(apng)
-            .unionByName(rez)
-            .unionByName(dh)
-            .unionByName(ph)
-            .unionByName(gate)
-            .unionByName(capdup)
+        return tagged_union(
+            "m7_decoded_pixel_stats", png, apng, rez, dh, ph, gate, capdup,
         )
 
     q["m7_decoded_pixel_stats"] = _m7
@@ -3201,7 +3129,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _p2(s: SparkSession, d: str) -> DataFrame:
         docs = _docs(s, d)
         pack = pack_sequences(docs, seq_len=2048).select(
-            F.lit("pack").alias("variant"),
             "doc_id",
             "n_tokens",
             "start_token",
@@ -3210,7 +3137,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit("").alias("payload"),
         )
         chunks = T.chunk_documents(docs, chunk_tokens=64, overlap=16).select(
-            F.lit("chunk").alias("variant"),
             "doc_id",
             F.col("n_tokens").cast("int").alias("n_tokens"),
             (F.col("chunk_idx") * 48).cast("long").alias("start_token"),
@@ -3230,7 +3156,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         ns = pack_sequences_no_straddle(docs, seq_len=256, shards=8).select(
-            F.lit("nostraddle").alias("variant"),
             "doc_id",
             "n_tokens",
             F.col("shard").cast("long").alias("start_token"),
@@ -3274,7 +3199,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         chat = CH.chat_loss_mask(
             CH.parse_conversations(CH.conversations_to_json(src_turns))
         ).select(
-            F.lit("chat").alias("variant"),
             F.col("conv_id").alias("doc_id"),
             F.col("n_tokens").cast("int").alias("n_tokens"),
             F.col("start_token").cast("long").alias("start_token"),
@@ -3298,7 +3222,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         fim = OBJ.fim_transform(docs, rate_permille=500).select(
-            F.lit("fim").alias("variant"),
             "doc_id",
             F.col("n_tokens").cast("int").alias("n_tokens"),
             F.col("prefix_tokens").alias("start_token"),
@@ -3307,7 +3230,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("rendered").alias("payload"),
         )
         span = OBJ.span_corruption(docs).select(
-            F.lit("span").alias("variant"),
             "doc_id",
             F.col("n_tokens").cast("int").alias("n_tokens"),
             F.col("n_spans").alias("start_token"),
@@ -3315,13 +3237,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit(-1).cast("long").alias("offset_in_bin"),
             F.concat_ws("\n", "input", "target").alias("payload"),
         )
-        return (
-            pack.unionByName(chunks)
-            .unionByName(ns)
-            .unionByName(chat)
-            .unionByName(fim)
-            .unionByName(span)
-        )
+        return tagged_union("p2_packing_chunking", pack, chunks, ns, chat, fim, span)
 
     q["p2_packing_chunking"] = _p2
 
@@ -3360,7 +3276,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit("").alias("split"),
         ]
         strat = stratified_sample(docs, "source", per_stratum=50).select(
-            F.lit("stratified").alias("variant"),
             "doc_id",
             "text",
             "lang",
@@ -3371,7 +3286,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         mix = sample_mixture(
             docs, {"src0": 0.5, "src1": 0.3, "src2": 0.2}, total=40
         ).select(
-            F.lit("mixture").alias("variant"),
             "doc_id",
             "text",
             "lang",
@@ -3380,7 +3294,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             *doc_sent,
         )
         spl = leakage_safe_split(docs, groups=p3_groups).select(
-            F.lit("split").alias("variant"),
             "doc_id",
             F.lit("").alias("text"),
             F.lit("").alias("lang"),
@@ -3396,7 +3309,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         best = resolve_duplicate_groups(
             docs, near_dup_threshold=0.8, groups=p3_groups
         ).select(
-            F.lit("keepbest").alias("variant"),
             "doc_id",
             "text",
             "lang",
@@ -3407,7 +3319,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Efraimidis-Spirakis weighted sample (priority ln(u)/w, u from
         # md5 hex — engine-replayable, top-k never a full sort).
         ws = weighted_sample(docs, n=50, weight_col="n_chars").select(
-            F.lit("wsample").alias("variant"),
             "doc_id",
             "text",
             "lang",
@@ -3434,7 +3345,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         temp = temperature_mixture(
             skewed, total=60, alpha=0.5, stratum_col="strat"
         ).select(
-            F.lit("temperature").alias("variant"),
             "doc_id",
             "text",
             "lang",
@@ -3442,13 +3352,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("n_chars").cast("long").alias("n_chars"),
             *doc_sent,
         )
-        return (
-            strat.unionByName(mix)
-            .unionByName(spl)
-            .unionByName(best)
-            .unionByName(ws)
-            .unionByName(temp)
-        )
+        return tagged_union("p3_sampling_split", strat, mix, spl, best, ws, temp)
 
     q["p3_sampling_split"] = _p3
 
@@ -3479,38 +3383,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tested separately — SCALING.md).
     def _s1(s: SparkSession, d: str) -> DataFrame:
         # One spread+pin of the corpus shared by all six kNN branches
-        # (inside knn_union): each branch otherwise re-scans and
+        # (inside knn_branches): each branch otherwise re-scans and
         # re-repartitions the embeddings table independently and
         # carries the full scan lineage through its plan.  Values are
-        # identical; measured 7.35 → 6.45 s at sf0.1 (pre-ivfpq)
-        # (scripts/ab_s1_pinned.py).  knn_union is module-level so the
-        # plan-contract tests audit the pre-checkpoint lineage.
-        res = knn_union(s, d)
-        # 'recall_*' branches: per-query recall@10 of every approximate
-        # path against the brute branch — the ANN quality claim itself
-        # (SCALING.md's recall-led defaults) hash-verified by the
-        # driver, not just pytest floors.  The 6-branch union is pinned
-        # once (localCheckpoint) so the recall joins read the ~50-row
-        # materialized result instead of re-executing each kNN plan.
-        pinned = res.localCheckpoint(eager=False)
-        bru = pinned.filter(F.col("variant") == "brute")
-        recalls = []
-        for t in ("srp16", "ivf16", "pq8x16", "pq_rerank", "ivfpq"):
-            recalls.append(
-                S.recall_at_k_per_query(
-                    bru, pinned.filter(F.col("variant") == t), k=10
-                ).select(
-                    F.lit(f"recall_{t}").alias("variant"),
-                    "query_id",
-                    F.lit(-1).cast("long").alias("vec_id"),
-                    F.col("recall").alias("score"),
-                    F.lit(-1).cast("int").alias("rank"),
-                )
-            )
-        out = pinned
-        for r in recalls:
-            out = out.unionByName(r)
-        return out
+        # identical; measured 7.35 → 6.45 s at sf0.1 (pre-ivfpq) by
+        # scripts/ab_s1_pinned.py as of commit 946c63e.  Each kNN
+        # branch is pinned (localCheckpoint) so the recall joins read
+        # its ~50-row materialized result instead of re-executing the
+        # kNN plan.
+        return knn_with_recalls(
+            [b.localCheckpoint(eager=False) for b in knn_branches(s, d)]
+        )
 
     q["s1_knn"] = _s1
     # s2 unions the index-build stages under one tagged key: SRP
@@ -3744,9 +3627,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         emb = _emb(s, d)
         self_pairs = S.embedding_near_duplicates(
             emb, threshold=0.4, num_planes=32
-        ).select(
-            F.lit("self").alias("variant"), "id_a", "id_b", "cosine"
-        )
+        ).select("id_a", "id_b", "cosine")
         train = emb.filter(F.col("vec_id") % 20 != 0)
         evals = emb.filter(F.col("vec_id") % 20 == 0).select(
             F.col("vec_id").alias("eval_id"), "embedding"
@@ -3754,7 +3635,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         decon = S.embedding_decontaminate(
             train, evals, threshold=0.3, num_planes=32
         ).select(
-            F.lit("decon").alias("variant"),
             F.col("vec_id").alias("id_a"),
             F.col("eval_id").alias("id_b"),
             "cosine",
@@ -3771,21 +3651,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             eager=False
         )
         semgroup = sd.select(
-            F.lit("semgroup").alias("variant"),
             F.col("vec_id").alias("id_a"),
             F.col("group_id").alias("id_b"),
             F.col("centroid_cosine").alias("cosine"),
         )
         semdrop = sd.filter(~F.col("keep")).select(
-            F.lit("semdrop").alias("variant"),
             F.col("vec_id").alias("id_a"),
             F.col("group_id").alias("id_b"),
             F.col("centroid_cosine").alias("cosine"),
         )
-        return (
-            self_pairs.unionByName(decon)
-            .unionByName(semgroup)
-            .unionByName(semdrop)
+        return tagged_union(
+            "s4_embedding_near_duplicates", self_pairs, decon, semgroup, semdrop,
         )
 
     q["s4_embedding_near_duplicates"] = _s4
@@ -3807,7 +3683,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         fun = A.funnel_analysis(
             ev, ["view", "click", "purchase"], horizon_days=7.0
         ).select(
-            F.lit("funnel").alias("variant"),
             F.col("user_id").cast("long").alias("k1"),
             F.col("steps_completed").cast("long").alias("k2"),
             F.coalesce(ep(F.col("step_1_ts")), sent).alias("v1"),
@@ -3815,7 +3690,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.coalesce(ep(F.col("step_3_ts")), sent).alias("v3"),
         )
         coh = A.cohort_retention(ev, period="week").select(
-            F.lit("cohort").alias("variant"),
             F.col("cohort").cast("long").alias("k1"),
             F.col("periods_since").cast("long").alias("k2"),
             F.col("n_active").cast("long").alias("v1"),
@@ -3838,7 +3712,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ij = A.interval_join(
             points, intervals, point_ts_col="ts", bucket_seconds=3600
         ).select(
-            F.lit("interval").alias("variant"),
             F.col("event_id").cast("long").alias("k1"),
             F.col("iv_user").cast("long").alias("k2"),
             ep(F.col("ts")).alias("v1"),
@@ -3888,7 +3761,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return GR.pagerank(
                 pr_edges, iterations=3, edges_pinned=True, nodes_df=g_nodes
             ).select(
-            F.lit("pagerank").alias("variant"),
             F.col("id").alias("k1"),
             F.col("out_deg").alias("k2"),
             F.col("rank").alias("v1"),
@@ -3910,7 +3782,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 edges_pinned=True,
                 nodes_df=g_nodes,
             ).select(
-            F.lit("trustrank").alias("variant"),
             F.col("id").alias("k1"),
             F.col("out_deg").alias("k2"),
             F.col("rank").alias("v1"),
@@ -3925,7 +3796,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return GR.hits(
                 pr_edges, iterations=3, edges_pinned=True, nodes_df=g_nodes
             ).select(
-            F.lit("hits").alias("variant"),
             F.col("id").alias("k1"),
             sent.alias("k2"),
             F.col("hub").alias("v1"),
@@ -3949,7 +3819,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.count("*").cast("long").alias("w")
             )
             return GR.pagerank(wedges, iterations=3, weight_col="w").select(
-                F.lit("wpagerank").alias("variant"),
                 F.col("id").alias("k1"),
                 F.col("out_deg").alias("k2"),
                 F.col("rank").alias("v1"),
@@ -3961,7 +3830,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # previously pytest-only.
         def _build_gsum():
             return GR.graph_summary(pr_edges, edges_pinned=True).select(
-            F.lit("gsum").alias("variant"),
             F.col("n_nodes").alias("k1"),
             F.col("n_edges").alias("k2"),
             F.col("max_out_degree").alias("v1"),
@@ -3980,7 +3848,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             return GR.hyperball_harmonic(
                 pr_edges, radius=3, p=6, edges_pinned=True, nodes_df=g_nodes
             ).select(
-            F.lit("hyperball").alias("variant"),
             F.col("id").alias("k1"),
             sent.alias("k2"),
             F.round(F.col("harmonic") * 1000000).cast("long").alias("v1"),
@@ -4012,15 +3879,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 pool.submit(inheritable_thread_target(b)) for b in builders
             ]
             pr, tr, ht, wpr, gsum, hb = [f.result() for f in futs]
-        return (
-            fun.unionByName(coh)
-            .unionByName(ij)
-            .unionByName(pr)
-            .unionByName(tr)
-            .unionByName(ht)
-            .unionByName(wpr)
-            .unionByName(gsum)
-            .unionByName(hb)
+        return tagged_union(
+            "e1_event_analytics", fun, coh, ij, pr, tr, ht, wpr, gsum, hb,
         )
 
     q["e1_event_analytics"] = _e1
@@ -4069,7 +3929,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         sentinel = F.lit(253370764800).cast("long")  # 9999-01-01 UTC
         dim_rows = merged2.select(
-            F.lit("dim").alias("variant"),
             "cust",
             "segment",
             ep(F.col("valid_from")).alias("vfrom"),
@@ -4082,14 +3941,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).select(F.col("fts").cast("timestamp").alias("fact_ts"))
         )
         asof = asof_lookup(facts, merged2, "cust", "fact_ts").select(
-            F.lit("asof").alias("variant"),
             "cust",
             "segment",
             ep(F.col("fact_ts")).alias("vfrom"),
             sentinel.alias("vto"),
             F.lit(-1).alias("cur"),
         )
-        return dim_rows.unionByName(asof)
+        return tagged_union("e2_scd2_asof", dim_rows, asof)
 
     q["e2_scd2_asof"] = _e2
 
@@ -4109,13 +3967,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         part = load_table(s, d, "part")
         z = part.select(
-            F.lit("zorder").alias("variant"),
             F.col("p_partkey").cast("long").alias("id"),
             normalize_to_bits(F.col("p_partkey"), 0, 100_000, bits=8).alias("qx"),
             normalize_to_bits(F.col("p_size"), 1, 50, bits=8).alias("qy"),
         ).withColumn("key", zorder_key([F.col("qx"), F.col("qy")], bits=8))
         h0 = part.select(
-            F.lit("hilbert").alias("variant"),
             F.col("p_partkey").cast("long").alias("id"),
             normalize_to_bits(F.col("p_partkey"), 0, 100_000, bits=16).alias("qx"),
             normalize_to_bits(F.col("p_retailprice"), 900, 2000, bits=16).alias("qy"),
@@ -4136,15 +3992,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         compact = plan_compaction(
             manifest, "size", 50_000, partition_by=["lang"]
         ).select(
-            F.lit("compact").alias("variant"),
             F.col("doc_id").cast("long").alias("id"),
             F.col("size").alias("qx"),
             F.col("bin_seq").cast("long").alias("qy"),
             F.col("bin_id").alias("key"),
         )
-        return (
-            z.unionByName(h.select("variant", "id", "qx", "qy", "key"))
-            .unionByName(compact)
+        return tagged_union(
+            "e3_layout_keys", z, h.select("id", "qx", "qy", "key"), compact
         )
 
     q["e3_layout_keys"] = _e3
@@ -4207,15 +4061,16 @@ def oracle_sql() -> dict[str, str]:
                     ELSE CAST({_t5_alpha_m2} AS DOUBLE) / z END, 4) AS estimate
   FROM thfold
 )
-SELECT 'agg' AS variant, symbol, 'all' AS bucket, buys, sells, number_shares,
+"""
+        + sql_union(
+            "t5_stock_aggregation",
+            """SELECT symbol, 'all' AS bucket, buys, sells, number_shares,
        -1.0 AS metric
-FROM agg
-UNION ALL
-SELECT 'daily', symbol, bucket, buys, sells, number_shares, metric FROM daily
-UNION ALL
-SELECT 'rolled', symbol, bucket, buys, sells, number_shares, metric FROM daily
-UNION ALL
-SELECT 'hllmerge', event_type, 'all', -1.0, -1.0, nonzero, estimate FROM thll"""
+FROM agg""",
+            "SELECT symbol, bucket, buys, sells, number_shares, metric FROM daily",
+            "SELECT symbol, bucket, buys, sells, number_shares, metric FROM daily",
+            "SELECT event_type, 'all', -1.0, -1.0, nonzero, estimate FROM thll",
+        )
     )
     o["q1_key_query"] = _ORACLE_AGG_CTE + "SELECT * FROM agg WHERE symbol = 'purchase'"
     o["q2_multikey_query"] = (
@@ -4224,21 +4079,23 @@ SELECT 'hllmerge', event_type, 'all', -1.0, -1.0, nonzero, estimate FROM thll"""
     )
     o["q3_range_query"] = (
         _ORACLE_AGG_CTE
-        + """SELECT 'both' AS variant, * FROM agg WHERE symbol BETWEEN 'click' AND 'signup'
-UNION ALL
-SELECT 'lower_only', * FROM agg WHERE symbol >= 'error'
-UNION ALL
-SELECT 'upper_only', * FROM agg WHERE symbol <= 'purchase'"""
+        + sql_union(
+            "q3_range_query",
+            "SELECT * FROM agg WHERE symbol BETWEEN 'click' AND 'signup'",
+            "SELECT * FROM agg WHERE symbol >= 'error'",
+            "SELECT * FROM agg WHERE symbol <= 'purchase'",
+        )
     )
     o["q6_full_scan"] = _ORACLE_AGG_CTE + "SELECT * FROM agg"
     o["q4_filtered_range"] = (
         _ORACLE_AGG_CTE
-        + """SELECT 'buys_gt_sells' AS variant, * FROM agg
-WHERE symbol BETWEEN 'click' AND 'view' AND buys > sells
-UNION ALL
-SELECT 'symbol_eq', * FROM agg WHERE symbol = 'purchase'
-UNION ALL
-SELECT 'numeric_and', * FROM agg WHERE buys > 299 AND number_shares > 100"""
+        + sql_union(
+            "q4_filtered_range",
+            """SELECT * FROM agg
+WHERE symbol BETWEEN 'click' AND 'view' AND buys > sells""",
+            "SELECT * FROM agg WHERE symbol = 'purchase'",
+            "SELECT * FROM agg WHERE buys > 299 AND number_shares > 100",
+        )
     )
     _wagg_cte = (
         _ORACLE_AGG_CTE
@@ -4296,14 +4153,16 @@ FROM sess GROUP BY user_id, sid
          CAST(SUM(number_shares) AS BIGINT) AS number_shares
   FROM hop GROUP BY 1, 2, 3
 )
-SELECT 'window_all' AS variant, * FROM wagg
-UNION ALL
-SELECT 'filtered_range', * FROM wagg
+"""
+        + sql_union(
+            "q5_filtered_window_range",
+            "SELECT * FROM wagg",
+            """SELECT * FROM wagg
 WHERE window_start >= TIMESTAMP '2024-01-02 00:00:00'
   AND window_end <= TIMESTAMP '2024-01-05 00:00:00'
-  AND buys > sells
-UNION ALL
-SELECT 'hopping', * FROM hopagg"""
+  AND buys > sells""",
+            "SELECT * FROM hopagg",
+        )
     )
     o["a1_pricing_summary"] = """
 SELECT l_returnflag, l_linestatus,
@@ -4377,14 +4236,17 @@ GROUP BY l_returnflag
     # a11: the two single-row KPIs as one tagged union (mirrors
     # q["a11_revenue_kpis"]) — Q14 promo ratio and Q19 disjunctive
     # revenue, aux = total_revenue / n_lines respectively.
-    o["a11_revenue_kpis"] = """
+    o["a11_revenue_kpis"] = (
+        """
 WITH ps AS MATERIALIZED (
   SELECT l_partkey AS pk, l_suppkey AS sk,
          ROUND(MIN(l_extendedprice / l_quantity), 6) AS unit_cost
   FROM lineitem GROUP BY 1, 2
 )
-SELECT 'promo_ratio' AS variant,
-       CAST(NULL AS VARCHAR) AS dim,
+"""
+        + sql_union(
+            "a11_revenue_kpis",
+            """SELECT CAST(NULL AS VARCHAR) AS dim,
        ROUND(100.0 * SUM(CASE WHEN p_type = 'PROMO'
                               THEN l_extendedprice * (1 - l_discount)
                               ELSE 0.0 END)
@@ -4392,23 +4254,10 @@ SELECT 'promo_ratio' AS variant,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS aux
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1996-12-31'
-UNION ALL
-SELECT 'disjunctive', NULL,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2),
-       CAST(COUNT(*) AS DOUBLE)
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-         AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-         AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-         AND l_quantity BETWEEN 20 AND 36)
-UNION ALL
--- Q21 shape, the TEXTBOOK CORRELATED form (the engine runs the
+WHERE l_shipdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1996-12-31'""",
+            """-- Q21 shape, the TEXTBOOK CORRELATED form (the engine runs the
 -- de-correlated fanout rewrite; equal output proves the rewrite)
-SELECT 'q21', NULL, CAST(l1.l_suppkey AS DOUBLE),
+SELECT NULL, CAST(l1.l_suppkey AS DOUBLE),
        CAST(COUNT(DISTINCT l1.l_orderkey) AS DOUBLE)
 FROM lineitem l1
 JOIN orders o ON o.o_orderkey = l1.l_orderkey
@@ -4423,35 +4272,31 @@ WHERE o.o_orderstatus = 'F'
     WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey != l1.l_suppkey
       AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
   )
-GROUP BY l1.l_suppkey
-UNION ALL
--- Q22 shape: scalar subquery + NOT IN anti-join
-SELECT 'q22cnt', NULL, CAST(c_nationkey AS DOUBLE), CAST(COUNT(*) AS DOUBLE)
+GROUP BY l1.l_suppkey""",
+            """-- Q22 shape: scalar subquery + NOT IN anti-join
+SELECT NULL, CAST(c_nationkey AS DOUBLE), CAST(COUNT(*) AS DOUBLE)
 FROM customer
 WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
   AND c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice >= 400000)
-GROUP BY c_nationkey
-UNION ALL
-SELECT 'q22bal', NULL, CAST(c_nationkey AS DOUBLE), ROUND(SUM(c_acctbal), 2)
+GROUP BY c_nationkey""",
+            """SELECT NULL, CAST(c_nationkey AS DOUBLE), ROUND(SUM(c_acctbal), 2)
 FROM customer
 WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
   AND c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice >= 400000)
-GROUP BY c_nationkey
-UNION ALL
--- Q17 shape, the TEXTBOOK CORRELATED scalar subquery (the engine runs
+GROUP BY c_nationkey""",
+            """-- Q17 shape, the TEXTBOOK CORRELATED scalar subquery (the engine runs
 -- the de-correlated brand-slice aggregate joined back by broadcast)
-SELECT 'q17', NULL, ROUND(SUM(l_extendedprice) / 7.0, 2), CAST(COUNT(*) AS DOUBLE)
+SELECT NULL, ROUND(SUM(l_extendedprice) / 7.0, 2), CAST(COUNT(*) AS DOUBLE)
 FROM lineitem
 JOIN part ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#4'
   AND l_quantity < (
     SELECT 0.2 * AVG(l2.l_quantity) FROM lineitem l2
     WHERE l2.l_partkey = p_partkey
-  )
-UNION ALL
--- Q15 shape: the TEXTBOOK form re-derives the revenue view inside the
+  )""",
+            """-- Q15 shape: the TEXTBOOK form re-derives the revenue view inside the
 -- global-max scalar subquery (the engine computes it once + broadcasts)
-SELECT 'q15', NULL, CAST(s_suppkey AS DOUBLE), total_revenue
+SELECT NULL, CAST(s_suppkey AS DOUBLE), total_revenue
 FROM (
   SELECT l_suppkey, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
   FROM lineitem
@@ -4465,17 +4310,15 @@ WHERE total_revenue = (
     WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-03-31'
     GROUP BY l_suppkey
   )
-)
-UNION ALL
--- Q6 shape: pure filter + global aggregate
-SELECT 'q6', NULL, ROUND(SUM(l_extendedprice * l_discount), 2),
+)""",
+            """-- Q6 shape: pure filter + global aggregate
+SELECT NULL, ROUND(SUM(l_extendedprice * l_discount), 2),
        CAST(COUNT(*) AS DOUBLE)
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.04 AND 0.08 AND l_quantity < 24
-UNION ALL
--- Q7 shape: bidirectional nation-pair trade volume by ship year
-SELECT 'q7', n1.n_name || '|' || n2.n_name || '|' || CAST(YEAR(l_shipdate) AS INT),
+  AND l_discount BETWEEN 0.04 AND 0.08 AND l_quantity < 24""",
+            """-- Q7 shape: bidirectional nation-pair trade volume by ship year
+SELECT n1.n_name || '|' || n2.n_name || '|' || CAST(YEAR(l_shipdate) AS INT),
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2), CAST(COUNT(*) AS DOUBLE)
 FROM lineitem
 JOIN supplier ON s_suppkey = l_suppkey
@@ -4486,10 +4329,9 @@ JOIN nation n2 ON n2.n_nationkey = c_nationkey
 WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
   AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
-GROUP BY 2
-UNION ALL
--- Q8 shape: one nation's market share inside a region/part-type slice
-SELECT 'q8', CAST(YEAR(o_orderdate) AS VARCHAR),
+GROUP BY 1""",
+            """-- Q8 shape: one nation's market share inside a region/part-type slice
+SELECT CAST(YEAR(o_orderdate) AS VARCHAR),
        ROUND(SUM(CASE WHEN n1.n_name = 'NATION_3'
                       THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
              / SUM(l_extendedprice * (1 - l_discount)), 6),
@@ -4504,11 +4346,10 @@ JOIN nation n2 ON n2.n_nationkey = c_nationkey
 JOIN region ON r_regionkey = n2.n_regionkey
 WHERE r_name = 'ASIA' AND p_type = 'PROMO'
   AND o_orderdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
-GROUP BY 2
-UNION ALL
--- Q9 shape: per-nation/year profit with supply-relation cost
+GROUP BY 1""",
+            """-- Q9 shape: per-nation/year profit with supply-relation cost
 -- (partsupp adaptation: ps derived from lineitem, see WITH header)
-SELECT 'q9', n_name || '|' || CAST(YEAR(l_shipdate) AS INT),
+SELECT n_name || '|' || CAST(YEAR(l_shipdate) AS INT),
        ROUND(SUM(l_extendedprice * (1 - l_discount) - unit_cost * l_quantity), 2),
        CAST(NULL AS DOUBLE)
 FROM lineitem
@@ -4517,59 +4358,53 @@ JOIN ps ON pk = l_partkey AND sk = l_suppkey
 JOIN supplier ON s_suppkey = l_suppkey
 JOIN nation ON n_nationkey = s_nationkey
 WHERE p_name LIKE '%red%'
-GROUP BY 2
-UNION ALL
--- Q13 shape: left outer join + two-level aggregation
-SELECT 'q13', NULL, CAST(c_count AS DOUBLE), CAST(COUNT(*) AS DOUBLE)
+GROUP BY 1""",
+            """-- Q13 shape: left outer join + two-level aggregation
+SELECT NULL, CAST(c_count AS DOUBLE), CAST(COUNT(*) AS DOUBLE)
 FROM (
   SELECT c_custkey, COUNT(o_orderkey) AS c_count
   FROM customer LEFT JOIN orders
     ON o_custkey = c_custkey AND o_orderpriority NOT LIKE '%URGENT%'
   GROUP BY c_custkey
 )
-GROUP BY c_count
-UNION ALL
--- Q18 shape: the TEXTBOOK IN-over-HAVING form (the engine aggregates
+GROUP BY c_count""",
+            """-- Q18 shape: the TEXTBOOK IN-over-HAVING form (the engine aggregates
 -- once and equi-joins the surviving key set back)
-SELECT 'q18', CAST(o_custkey AS VARCHAR), CAST(o_orderkey AS DOUBLE),
+SELECT CAST(o_custkey AS VARCHAR), CAST(o_orderkey AS DOUBLE),
        CAST((SELECT SUM(l_quantity) FROM lineitem WHERE l_orderkey = o_orderkey) AS DOUBLE)
 FROM orders
 WHERE o_orderkey IN (
   SELECT l_orderkey FROM lineitem GROUP BY l_orderkey HAVING SUM(l_quantity) > 300
-)
-UNION ALL
--- Q2 shape: the TEXTBOOK CORRELATED-MIN scalar subquery over the
+)""",
+            """-- Q2 shape: the TEXTBOOK CORRELATED-MIN scalar subquery over the
 -- supply relation (the engine runs a window-min over one aggregate)
-SELECT 'q2', s_name, CAST(pk AS DOUBLE), unit_cost
+SELECT s_name, CAST(pk AS DOUBLE), unit_cost
 FROM ps
 JOIN part ON p_partkey = pk
 JOIN supplier ON s_suppkey = sk
 WHERE p_type = 'SMALL' AND p_size < 10
-  AND unit_cost = (SELECT MIN(ps2.unit_cost) FROM ps ps2 WHERE ps2.pk = ps.pk)
-UNION ALL
--- Q11 shape: the TEXTBOOK global-scalar-in-HAVING form (the engine
+  AND unit_cost = (SELECT MIN(ps2.unit_cost) FROM ps ps2 WHERE ps2.pk = ps.pk)""",
+            """-- Q11 shape: the TEXTBOOK global-scalar-in-HAVING form (the engine
 -- re-aggregates its own per-part aggregate and broadcasts one row);
 -- the threshold is mean-relative so selectivity is scale-free
-SELECT 'q11', NULL, CAST(l_partkey AS DOUBLE),
+SELECT NULL, CAST(l_partkey AS DOUBLE),
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
 FROM lineitem
 GROUP BY l_partkey
 HAVING SUM(l_extendedprice * (1 - l_discount)) >
        1.5 * (SELECT SUM(l_extendedprice * (1 - l_discount))
-                    / COUNT(DISTINCT l_partkey) FROM lineitem)
-UNION ALL
--- Q16 shape: NOT IN blocklist + count-distinct per part attribute
-SELECT 'q16', p_brand || '|' || p_type, CAST(p_size AS DOUBLE),
+                    / COUNT(DISTINCT l_partkey) FROM lineitem)""",
+            """-- Q16 shape: NOT IN blocklist + count-distinct per part attribute
+SELECT p_brand || '|' || p_type, CAST(p_size AS DOUBLE),
        CAST(COUNT(DISTINCT l_suppkey) AS DOUBLE)
 FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) sup
 JOIN part ON p_partkey = l_partkey
 WHERE p_type <> 'PROMO' AND p_size IN (1, 5, 11, 17, 23, 29)
   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY 2, 3
-UNION ALL
--- Q20 shape: the TEXTBOOK nested-IN + correlated scalar form (the
+GROUP BY 1, 2""",
+            """-- Q20 shape: the TEXTBOOK nested-IN + correlated scalar form (the
 -- engine runs one aggregate + a window sum, zero extra scans)
-SELECT 'q20', s_name, CAST(s_suppkey AS DOUBLE), CAST(NULL AS DOUBLE)
+SELECT s_name, CAST(s_suppkey AS DOUBLE), CAST(NULL AS DOUBLE)
 FROM supplier
 WHERE s_suppkey IN (
   SELECT sk FROM (
@@ -4584,7 +4419,20 @@ WHERE s_suppkey IN (
                       AND l_shipdate >= TIMESTAMP '1996-01-01'
                       AND l_shipdate < TIMESTAMP '1997-01-01')
 )
-"""
+""",
+            """SELECT NULL,
+       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2),
+       CAST(COUNT(*) AS DOUBLE)
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
+         AND l_quantity BETWEEN 1 AND 11)
+   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
+         AND l_quantity BETWEEN 10 AND 20)
+   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
+         AND l_quantity BETWEEN 20 AND 36)""",
+        )
+    )
     o["a4_order_priority_exists"] = """
 SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders
@@ -4599,7 +4447,8 @@ SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
 FROM part
 WHERE p_brand BETWEEN 'Brand#1' AND 'Brand#3' AND p_size >= 10
 """
-    o["a6_asof_purchase_click"] = """
+    o["a6_asof_purchase_click"] = (
+        """
 WITH l AS (
   SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'
 ), r AS (
@@ -4627,18 +4476,21 @@ WITH l AS (
   FROM l LEFT JOIN r ON r.user_id = l.user_id AND r.ts <= l.ts
                      AND r.ts >= l.ts - INTERVAL 1 HOUR
 )
-SELECT 'bwd' AS variant, event_id, user_id, ts, value,
+"""
+        + sql_union(
+            "a6_asof_purchase_click",
+            """SELECT event_id, user_id, ts, value,
        click_ts, click_value, click_event_id
-FROM bwd WHERE rn = 1 AND click_event_id IS NOT NULL
-UNION ALL
-SELECT 'fwd', event_id, user_id, ts, value,
+FROM bwd WHERE rn = 1 AND click_event_id IS NOT NULL""",
+            """SELECT event_id, user_id, ts, value,
        click_ts, click_value, click_event_id
-FROM fwd WHERE rn = 1 AND click_event_id IS NOT NULL
-UNION ALL
-SELECT 'bwdtol', event_id, user_id, ts, value,
+FROM fwd WHERE rn = 1 AND click_event_id IS NOT NULL""",
+            """SELECT event_id, user_id, ts, value,
        click_ts, click_value, click_event_id
 FROM bwdtol WHERE rn = 1 AND click_event_id IS NOT NULL
-"""
+""",
+        )
+    )
     o["a7_revenue_rollup"] = """
 SELECT r_name, n_name,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
@@ -4871,7 +4723,8 @@ def _extension_oracles() -> dict[str, str]:
 )"""
     )
 
-    o["e1_event_analytics"] = f"""
+    o["e1_event_analytics"] = (
+        f"""
 WITH steps AS (
   SELECT user_id,
          MIN(CASE WHEN event_type = 'view' THEN ts END) AS t1,
@@ -4964,48 +4817,45 @@ WITH steps AS (
               AS BIGINT) AS rank
   FROM pr_r2 r LEFT JOIN pr_i3 i ON r.id = i.id CROSS JOIN pr_d3 d
 ){tr_ctes}{hits_ctes}{wpr_ctes}{hb_ctes}
-SELECT 'funnel' AS variant, CAST(user_id AS BIGINT) AS k1,
+"""
+        + sql_union(
+            "e1_event_analytics",
+            f"""SELECT CAST(user_id AS BIGINT) AS k1,
        CAST(steps_completed AS BIGINT) AS k2,
        COALESCE({ep('t1')}, -1) AS v1,
        COALESCE({ep('t2')}, -1) AS v2,
        COALESCE({ep('t3')}, -1) AS v3
-FROM fun
-UNION ALL
-SELECT 'cohort', c.cohort, a.p - c.cohort, CAST(COUNT(*) AS BIGINT), -1, -1
+FROM fun""",
+            """SELECT c.cohort, a.p - c.cohort, CAST(COUNT(*) AS BIGINT), -1, -1
 FROM act a JOIN coh c USING (user_id)
-GROUP BY c.cohort, a.p - c.cohort
-UNION ALL
-SELECT 'interval', CAST(e.event_id AS BIGINT), CAST(i.iv_user AS BIGINT),
+GROUP BY c.cohort, a.p - c.cohort""",
+            f"""SELECT CAST(e.event_id AS BIGINT), CAST(i.iv_user AS BIGINT),
        {ep('e.ts')}, {ep('i.start_ts')}, {ep('i.end_ts')}
 FROM events e JOIN iv i ON e.ts >= i.start_ts AND e.ts < i.end_ts
-WHERE e.event_type = 'purchase'
-UNION ALL
-SELECT 'pagerank', r3.id, r3.outd, r3.rank, r2.rank,
+WHERE e.event_type = 'purchase'""",
+            """SELECT r3.id, r3.outd, r3.rank, r2.rank,
        COALESCE(pr_ind.ind, 0)
 FROM pr_r3 r3
 JOIN pr_r2 r2 ON r3.id = r2.id
-LEFT JOIN pr_ind ON r3.id = pr_ind.id
-UNION ALL
-SELECT 'trustrank', r3.id, r3.outd, r3.rank, r2.rank,
+LEFT JOIN pr_ind ON r3.id = pr_ind.id""",
+            """SELECT r3.id, r3.outd, r3.rank, r2.rank,
        CAST(r3.is_seed AS BIGINT)
-FROM tr_r3 r3 JOIN tr_r2 r2 ON r3.id = r2.id
-UNION ALL
-SELECT 'hits', h.id, -1, h.h, a.a, -1
-FROM ht_h3 h JOIN ht_a3 a ON h.id = a.id
-UNION ALL
-SELECT 'wpagerank', r3.id, r3.outd, r3.rank, r2.rank,
+FROM tr_r3 r3 JOIN tr_r2 r2 ON r3.id = r2.id""",
+            """SELECT h.id, -1, h.h, a.a, -1
+FROM ht_h3 h JOIN ht_a3 a ON h.id = a.id""",
+            """SELECT r3.id, r3.outd, r3.rank, r2.rank,
        COALESCE(pr_ind.ind, 0)
 FROM wpr_r3 r3
 JOIN wpr_r2 r2 ON r3.id = r2.id
-LEFT JOIN pr_ind ON r3.id = pr_ind.id
-UNION ALL
-SELECT 'gsum', n_nodes, n_edges, maxod, dang, recip FROM gsum
-UNION ALL
-SELECT 'hyperball', node, -1,
+LEFT JOIN pr_ind ON r3.id = pr_ind.id""",
+            "SELECT n_nodes, n_edges, maxod, dang, recip FROM gsum",
+            """SELECT node, -1,
        CAST(ROUND(harmonic * 1000000) AS BIGINT),
        CAST(ROUND(reach * 1000000) AS BIGINT), -1
 FROM hb
-"""
+""",
+        )
+    )
 
     # e2 emits vfrom/vto as epoch-second BIGINTs (pandas datetime64[ns]
     # cannot represent the 9999-01-01 open-version sentinel — round-5
@@ -5013,35 +4863,38 @@ FROM hb
     #   2024-01-01 = 1704067200   2024-01-03 = 1704240000
     #   2024-01-05 = 1704412800   2024-01-10 = 1704844800
     #   2024-01-12 = 1705017600   9999-01-01 = 253370764800
-    o["e2_scd2_asof"] = f"""
+    o["e2_scd2_asof"] = (
+        f"""
 WITH c AS (
   SELECT CAST(c_custkey AS BIGINT) AS cust, c_mktsegment AS seg,
          c_custkey % 3 = 0 AS m3, c_custkey % 5 = 0 AS m5
   FROM customer
 )
-SELECT 'dim' AS variant, cust, seg AS segment,
+"""
+        + sql_union(
+            "e2_scd2_asof",
+            f"""SELECT cust, seg AS segment,
        {ep("TIMESTAMP '2024-01-01 00:00:00'")} AS vfrom,
        {ep("TIMESTAMP '2024-01-10 00:00:00'")} AS vto,
        CAST(0 AS INTEGER) AS cur
 FROM c WHERE m3
 UNION ALL
-SELECT 'dim', cust, seg || '+A', {ep("TIMESTAMP '2024-01-10 00:00:00'")},
+SELECT cust, seg || '+A', {ep("TIMESTAMP '2024-01-10 00:00:00'")},
        253370764800, 1
 FROM c WHERE m3
 UNION ALL
-SELECT 'dim', cust, seg, {ep("TIMESTAMP '2024-01-01 00:00:00'")},
+SELECT cust, seg, {ep("TIMESTAMP '2024-01-01 00:00:00'")},
        {ep("TIMESTAMP '2024-01-05 00:00:00'")}, 0
 FROM c WHERE m5 AND NOT m3
 UNION ALL
-SELECT 'dim', cust, 'B', {ep("TIMESTAMP '2024-01-05 00:00:00'")},
+SELECT cust, 'B', {ep("TIMESTAMP '2024-01-05 00:00:00'")},
        253370764800, 1
 FROM c WHERE m5 AND NOT m3
 UNION ALL
-SELECT 'dim', cust, seg, {ep("TIMESTAMP '2024-01-01 00:00:00'")},
+SELECT cust, seg, {ep("TIMESTAMP '2024-01-01 00:00:00'")},
        253370764800, 1
-FROM c WHERE NOT m3 AND NOT m5
-UNION ALL
-SELECT 'asof', cust,
+FROM c WHERE NOT m3 AND NOT m5""",
+            f"""SELECT cust,
        CASE WHEN fts = {ep("TIMESTAMP '2024-01-03 00:00:00'")} THEN seg
             WHEN m3 THEN seg || '+A'
             WHEN m5 THEN 'B'
@@ -5051,13 +4904,16 @@ FROM c CROSS JOIN (
   VALUES ({ep("TIMESTAMP '2024-01-03 00:00:00'")}),
          ({ep("TIMESTAMP '2024-01-12 00:00:00'")})
 ) AS t(fts)
-"""
+""",
+        )
+    )
 
     zterms = " + ".join(
         f"((qx // {2**i}) % 2) * {2**(2 * i)} + ((qy // {2**i}) % 2) * {2**(2 * i + 1)}"
         for i in range(8)
     )
-    o["e3_layout_keys"] = f"""
+    o["e3_layout_keys"] = (
+        f"""
 WITH RECURSIVE quant AS (
   SELECT CAST(p_partkey AS BIGINT) AS id,
          CAST(LEAST(GREATEST(FLOOR((CAST(p_partkey AS DOUBLE) - 0.0)
@@ -5092,14 +4948,15 @@ WITH RECURSIVE quant AS (
     ) probe
   ) step
 )
-SELECT 'zorder' AS variant, id, zqx AS qx, zqy AS qy,
+"""
+        + sql_union(
+            "e3_layout_keys",
+            f"""SELECT id, zqx AS qx, zqy AS qy,
        CAST({zterms} AS BIGINT) AS key
-FROM (SELECT id, zqx, zqy, zqx AS qx, zqy AS qy FROM quant) z
-UNION ALL
-SELECT 'hilbert', q.id, q.hx, q.hy, h.d
-FROM quant q JOIN hil h ON h.id = q.id AND h.lvl = -1
-UNION ALL
-SELECT 'compact', doc_id, size,
+FROM (SELECT id, zqx, zqy, zqx AS qx, zqy AS qy FROM quant) z""",
+            """SELECT q.id, q.hx, q.hy, h.d
+FROM quant q JOIN hil h ON h.id = q.id AND h.lvl = -1""",
+            """SELECT doc_id, size,
        CAST(ROW_NUMBER() OVER (PARTITION BY lang, bin
                                ORDER BY size DESC, doc_id) AS BIGINT),
        bin
@@ -5111,7 +4968,9 @@ FROM (
                   0) // 50000 AS BIGINT) AS bin
   FROM documents
 )
-"""
+""",
+        )
+    )
     return o
 
 
@@ -5229,7 +5088,8 @@ SELECT * FROM cum WHERE cum_tokens <= 20000
     h6b = _h6("CAST(doc_id AS VARCHAR) || '|b'")
     h6m = _h6("CAST(doc_id AS VARCHAR) || '|m'")
     h6s = _h6("CAST(doc_id AS VARCHAR) || '|s|' || CAST(i AS VARCHAR)")
-    p2 = f"""
+    p2 = (
+        f"""
 WITH t AS (
   SELECT doc_id, string_split({norm}, ' ') AS toks,
          COALESCE(len(string_split({norm}, ' ')), 0) AS n
@@ -5246,26 +5106,27 @@ WITH t AS (
 ), c AS (
   SELECT doc_id, n, SUM(n) OVER (ORDER BY doc_id) AS cum FROM t
 )
-SELECT 'pack' AS variant, doc_id,
+"""
+        + sql_union(
+            "p2_packing_chunking",
+            """SELECT doc_id,
        CAST(n AS INTEGER) AS n_tokens,
        CAST(cum - n AS BIGINT) AS start_token,
        CAST((cum - n) // 2048 AS BIGINT) AS bin_id,
        CAST((cum - n) % 2048 AS BIGINT) AS offset_in_bin,
        '' AS payload
-FROM c
-UNION ALL
-SELECT 'chunk', doc_id,
+FROM c""",
+            """SELECT doc_id,
        CAST(LEAST(n - g.c * 48, 64) AS INTEGER),
        CAST(g.c * 48 AS BIGINT),
        CAST(g.c AS BIGINT),
        CAST(-1 AS BIGINT),
        array_to_string(toks[g.c * 48 + 1 : g.c * 48 + 64], ' ')
 FROM t, unnest(generate_series(0,
-       GREATEST(1, CAST(CEIL((n - 16) / 48.0) AS BIGINT)) - 1)) AS g(c)
-UNION ALL
--- nostraddle: next-fit replay — every shard's fill state advances one
+       GREATEST(1, CAST(CEIL((n - 16) / 48.0) AS BIGINT)) - 1)) AS g(c)""",
+            """-- nostraddle: next-fit replay — every shard's fill state advances one
 -- row per recursion step (all shards in parallel per iteration)
-SELECT 'nostraddle', doc_id,
+SELECT doc_id,
        CAST(n_tokens AS INTEGER),
        CAST(shard AS BIGINT),
        bin_id, offset_in_bin,
@@ -5293,67 +5154,13 @@ FROM (
     FROM nf JOIN sh s ON s.shard = nf.shard AND s.rn = nf.rn + 1
   )
   SELECT * FROM nf
-)
-UNION ALL
--- fim: deterministic fill-in-the-middle replay — the two md5 cut
--- draws, the PSM/SPM parity, and the byte-exact rendering
-SELECT 'fim', doc_id, CAST(n AS INTEGER),
-       CAST(CASE WHEN fim THEN lo ELSE n END AS BIGINT),
-       CAST(CASE WHEN fim THEN hi - lo ELSE 0 END AS BIGINT),
-       CAST(CASE WHEN fim THEN n - hi ELSE 0 END AS BIGINT),
-       CASE WHEN NOT fim THEN array_to_string(toks, ' ')
-            WHEN spm THEN '<|fim_suffix|>' || COALESCE(array_to_string(toks[hi+1:n], ' '), '')
-                 || '<|fim_prefix|>' || COALESCE(array_to_string(toks[1:lo], ' '), '')
-                 || '<|fim_middle|>' || COALESCE(array_to_string(toks[lo+1:hi], ' '), '')
-            ELSE '<|fim_prefix|>' || COALESCE(array_to_string(toks[1:lo], ' '), '')
-                 || '<|fim_suffix|>' || COALESCE(array_to_string(toks[hi+1:n], ' '), '')
-                 || '<|fim_middle|>' || COALESCE(array_to_string(toks[lo+1:hi], ' '), '')
-       END
-FROM (
-  SELECT doc_id, toks, n, fim, spm, LEAST(c1, c2) AS lo, GREATEST(c1, c2) AS hi
-  FROM (
-    SELECT doc_id, toks, n,
-           ({h6fim}) % 1000 < 500 AS fim,
-           ({h6a}) % (n + 1) AS c1,
-           ({h6b}) % (n + 1) AS c2,
-           ({h6m}) % 2 = 1 AS spm
-    FROM tz
-  )
-)
-UNION ALL
--- span: T5 span corruption replay — the aligned md5 start grid,
--- sentinel numbering, the position-skip input, the span-spelling
--- target, tail truncation
-SELECT 'span', doc_id, CAST(n AS INTEGER),
-       CAST(len(starts) AS BIGINT),
-       CAST(COALESCE(list_sum(list_transform(starts,
-              s -> LEAST(3, n - s + 1))), 0) AS BIGINT),
-       CAST(-1 AS BIGINT),
-       COALESCE(array_to_string(list_filter(list_transform(generate_series(1, n),
-           i -> CASE
-             WHEN list_contains(starts, i)
-               THEN '<extra_id_' || CAST(len(list_filter(starts, s -> s <= i)) AS VARCHAR) || '>'
-             WHEN len(list_filter(starts, s -> i >= s AND i < s + 3)) > 0
-               THEN NULL
-             ELSE toks[i] END),
-           x -> x IS NOT NULL), ' '), '')
-       || chr(10) ||
-       COALESCE(array_to_string(flatten(list_transform(starts,
-           s -> ['<extra_id_' || CAST(len(list_filter(starts, s2 -> s2 <= s)) AS VARCHAR) || '>']
-                || toks[s:LEAST(s + 2, n)])), ' '), '')
-FROM (
-  SELECT doc_id, toks, n,
-         list_filter(generate_series(1, n),
-             i -> i % 3 = 1 AND ({h6s}) % 7 = 0) AS starts
-  FROM tz
-)
-UNION ALL
--- chat: the SFT loss-mask table computed DIRECTLY from documents —
+)""",
+            """-- chat: the SFT loss-mask table computed DIRECTLY from documents —
 -- the Spark side goes through the real to_json -> from_json round
 -- trip first, so the hash proves serialization is lossless and the
 -- per-turn accounting (whitespace tokens + 3 template-overhead
 -- tokens, per-conv cumulative offsets, assistant-only mask) exact
-SELECT 'chat', conv_id,
+SELECT conv_id,
        CAST(n_tokens AS INTEGER),
        CAST(COALESCE(SUM(n_tokens) OVER (
            PARTITION BY conv_id ORDER BY turn_idx
@@ -5377,7 +5184,60 @@ FROM (
     FROM documents
   )
 )
-"""
+""",
+            f"""-- fim: deterministic fill-in-the-middle replay — the two md5 cut
+-- draws, the PSM/SPM parity, and the byte-exact rendering
+SELECT doc_id, CAST(n AS INTEGER),
+       CAST(CASE WHEN fim THEN lo ELSE n END AS BIGINT),
+       CAST(CASE WHEN fim THEN hi - lo ELSE 0 END AS BIGINT),
+       CAST(CASE WHEN fim THEN n - hi ELSE 0 END AS BIGINT),
+       CASE WHEN NOT fim THEN array_to_string(toks, ' ')
+            WHEN spm THEN '<|fim_suffix|>' || COALESCE(array_to_string(toks[hi+1:n], ' '), '')
+                 || '<|fim_prefix|>' || COALESCE(array_to_string(toks[1:lo], ' '), '')
+                 || '<|fim_middle|>' || COALESCE(array_to_string(toks[lo+1:hi], ' '), '')
+            ELSE '<|fim_prefix|>' || COALESCE(array_to_string(toks[1:lo], ' '), '')
+                 || '<|fim_suffix|>' || COALESCE(array_to_string(toks[hi+1:n], ' '), '')
+                 || '<|fim_middle|>' || COALESCE(array_to_string(toks[lo+1:hi], ' '), '')
+       END
+FROM (
+  SELECT doc_id, toks, n, fim, spm, LEAST(c1, c2) AS lo, GREATEST(c1, c2) AS hi
+  FROM (
+    SELECT doc_id, toks, n,
+           ({h6fim}) % 1000 < 500 AS fim,
+           ({h6a}) % (n + 1) AS c1,
+           ({h6b}) % (n + 1) AS c2,
+           ({h6m}) % 2 = 1 AS spm
+    FROM tz
+  )
+)""",
+            f"""-- span: T5 span corruption replay — the aligned md5 start grid,
+-- sentinel numbering, the position-skip input, the span-spelling
+-- target, tail truncation
+SELECT doc_id, CAST(n AS INTEGER),
+       CAST(len(starts) AS BIGINT),
+       CAST(COALESCE(list_sum(list_transform(starts,
+              s -> LEAST(3, n - s + 1))), 0) AS BIGINT),
+       CAST(-1 AS BIGINT),
+       COALESCE(array_to_string(list_filter(list_transform(generate_series(1, n),
+           i -> CASE
+             WHEN list_contains(starts, i)
+               THEN '<extra_id_' || CAST(len(list_filter(starts, s -> s <= i)) AS VARCHAR) || '>'
+             WHEN len(list_filter(starts, s -> i >= s AND i < s + 3)) > 0
+               THEN NULL
+             ELSE toks[i] END),
+           x -> x IS NOT NULL), ' '), '')
+       || chr(10) ||
+       COALESCE(array_to_string(flatten(list_transform(starts,
+           s -> ['<extra_id_' || CAST(len(list_filter(starts, s2 -> s2 <= s)) AS VARCHAR) || '>']
+                || toks[s:LEAST(s + 2, n)])), ' '), '')
+FROM (
+  SELECT doc_id, toks, n,
+         list_filter(generate_series(1, n),
+             i -> i % 3 = 1 AND ({h6s}) % 7 = 0) AS starts
+  FROM tz
+)""",
+        )
+    )
     # p3 union: stratified ⊕ hardcoded mixture quotas (int(40·w/Σw):
     # src0=20, src1=12, src2=8 — the Spark side computes them driver-
     # side from the same formula) ⊕ the leakage-safe split, whose group
@@ -5389,7 +5249,8 @@ FROM (
         "(strpos('0123456789abcdef', substr(md5(CAST(group_id AS VARCHAR)), i, 1)) - 1)"
         " * (16 ** (6 - i)))) AS BIGINT) % 100)"
     )
-    p3 = f"""
+    p3 = (
+        f"""
 WITH ndgroups AS MATERIALIZED (
   SELECT * FROM ({d10_sql}) _g
 ), qual AS MATERIALIZED (
@@ -5421,7 +5282,10 @@ WITH ndgroups AS MATERIALIZED (
     FROM ndgroups g JOIN qual q USING (doc_id)
   ) WHERE rn = 1
 )
-SELECT 'stratified' AS variant, doc_id, text, lang, source,
+"""
+        + sql_union(
+            "p3_sampling_split",
+            """SELECT doc_id, text, lang, source,
        CAST(n_chars AS BIGINT) AS n_chars,
        CAST(-1 AS BIGINT) AS group_id, CAST(-1 AS INTEGER) AS bucket,
        '' AS split
@@ -5429,9 +5293,8 @@ FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY source
       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
   FROM documents
-) WHERE rn <= 50
-UNION ALL
-SELECT 'mixture', doc_id, text, lang, source, CAST(n_chars AS BIGINT),
+) WHERE rn <= 50""",
+            """SELECT doc_id, text, lang, source, CAST(n_chars AS BIGINT),
        CAST(-1 AS BIGINT), CAST(-1 AS INTEGER), ''
 FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY source
@@ -5439,26 +5302,23 @@ FROM (
   FROM documents WHERE source IN ('src0', 'src1', 'src2')
 ) WHERE (source = 'src0' AND rn <= 20)
    OR (source = 'src1' AND rn <= 12)
-   OR (source = 'src2' AND rn <= 8)
-UNION ALL
-SELECT 'split', doc_id, '', '', '', CAST(-1 AS BIGINT),
+   OR (source = 'src2' AND rn <= 8)""",
+            f"""SELECT doc_id, '', '', '', CAST(-1 AS BIGINT),
        group_id, CAST({hex6g} AS INTEGER),
        CASE WHEN {hex6g} < 90 THEN 'train'
             WHEN {hex6g} < 95 THEN 'val' ELSE 'test' END
 FROM (
   SELECT d0.doc_id, COALESCE(gg.group_id, d0.doc_id) AS group_id
   FROM documents d0 LEFT JOIN ndgroups gg USING (doc_id)
-)
-UNION ALL
-SELECT 'keepbest', d.doc_id, d.text, d.lang, d.source,
+)""",
+            """SELECT d.doc_id, d.text, d.lang, d.source,
        CAST(d.n_chars AS BIGINT), CAST(-1 AS BIGINT), CAST(-1 AS INTEGER), ''
 FROM documents d
 WHERE d.doc_id NOT IN (SELECT doc_id FROM ndgroups)
-   OR d.doc_id IN (SELECT doc_id FROM winners)
-UNION ALL
--- Efraimidis-Spirakis weighted sample: priority ln(u)/w with u from
+   OR d.doc_id IN (SELECT doc_id FROM winners)""",
+            """-- Efraimidis-Spirakis weighted sample: priority ln(u)/w with u from
 -- the first 12 md5 hex digits (exact in a double), top-50 by priority
-SELECT 'wsample', doc_id, text, lang, source, CAST(n_chars AS BIGINT),
+SELECT doc_id, text, lang, source, CAST(n_chars AS BIGINT),
        CAST(-1 AS BIGINT), CAST(-1 AS INTEGER), ''
 FROM (
   SELECT * FROM (
@@ -5468,11 +5328,10 @@ FROM (
         / CAST(n_chars AS DOUBLE) AS _pri
     FROM documents WHERE n_chars > 0
   ) ORDER BY _pri DESC, doc_id LIMIT 50
-)
-UNION ALL
--- alpha=0.5 temperature mixture: isqrt (= FLOOR(POW(count, 0.5)), exact
+)""",
+            """-- alpha=0.5 temperature mixture: isqrt (= FLOOR(POW(count, 0.5)), exact
 -- for perfect squares, 1-ulp-safe otherwise) weights, integer quotas
-SELECT 'temperature', doc_id, text, lang, source, CAST(n_chars AS BIGINT),
+SELECT doc_id, text, lang, source, CAST(n_chars AS BIGINT),
        CAST(-1 AS BIGINT), CAST(-1 AS INTEGER), ''
 FROM (
   SELECT d.*, q.quota,
@@ -5493,7 +5352,9 @@ FROM (
     )
   ) q USING (strat)
 ) WHERE rn <= quota
-"""
+""",
+        )
+    )
     return {
         "p1_curation_pipeline": sql,
         "p2_packing_chunking": p2,
@@ -6122,44 +5983,40 @@ SELECT * FROM (
   JOIN cdh b ON b.asset_id = j.id_b
 ) WHERE hamming <= 6
 """
-    o["m7_decoded_pixel_stats"] = f"""
-SELECT 'png' AS variant, asset_id, CAST(0 AS INTEGER) AS frame_idx,
+    o["m7_decoded_pixel_stats"] = sql_union(
+            "m7_decoded_pixel_stats",
+            f"""SELECT asset_id, CAST(0 AS INTEGER) AS frame_idx,
        CAST(1 AS INTEGER) AS n_frames, width, height,
        width AS target_width, height AS target_height,
        channels, pixel_mean, pixel_min, pixel_max
-FROM ({png_sql}) png_v
-UNION ALL
-SELECT 'apng', asset_id, frame_idx, n_frames, width, height,
+FROM ({png_sql}) png_v""",
+            f"""SELECT asset_id, frame_idx, n_frames, width, height,
        width, height, channels, pixel_mean, pixel_min, pixel_max
-FROM ({apng_sql}) apng_v
-UNION ALL
-SELECT 'resize', asset_id, CAST(0 AS INTEGER), CAST(1 AS INTEGER),
+FROM ({apng_sql}) apng_v""",
+            f"""SELECT asset_id, CAST(0 AS INTEGER), CAST(1 AS INTEGER),
        width, height, target_width, target_height,
        channels, pixel_mean, pixel_min, pixel_max
-FROM ({rez_sql}) rez_v
-UNION ALL
--- dhash: hash quarters ride the dim columns (each < 2^16), source
+FROM ({rez_sql}) rez_v""",
+            f"""-- dhash: hash quarters ride the dim columns (each < 2^16), source
 -- dims ride pixel_min/pixel_max, mean is a -1 sentinel
-SELECT 'dhash', asset_id, CAST(0 AS INTEGER), CAST(1 AS INTEGER),
+SELECT asset_id, CAST(0 AS INTEGER), CAST(1 AS INTEGER),
        CAST(q0 AS INTEGER), CAST(q1 AS INTEGER),
        CAST(q2 AS INTEGER), CAST(q3 AS INTEGER),
        CAST(ch AS INTEGER), -1.0,
        CAST(w AS INTEGER), CAST(h AS INTEGER)
-FROM ({dhash_sql}) dh_v
-UNION ALL
--- phash: same riding convention as dhash
-SELECT 'phash', asset_id, CAST(0 AS INTEGER), CAST(1 AS INTEGER),
+FROM ({dhash_sql}) dh_v""",
+            f"""-- phash: same riding convention as dhash
+SELECT asset_id, CAST(0 AS INTEGER), CAST(1 AS INTEGER),
        CAST(q0 AS INTEGER), CAST(q1 AS INTEGER),
        CAST(q2 AS INTEGER), CAST(q3 AS INTEGER),
        CAST(ch AS INTEGER), -1.0,
        CAST(w AS INTEGER), CAST(h AS INTEGER)
-FROM ({phash_sql}) ph_v
-UNION ALL
--- gate: pair quality gates replayed closed-form — the asset's pixels
+FROM ({phash_sql}) ph_v""",
+            """-- gate: pair quality gates replayed closed-form — the asset's pixels
 -- are n = w*h*ch CONSECUTIVE residues mod 256, so n_distinct =
 -- least(n, 256) and the dominant count = ceil(n/256); caption gates
 -- from the doc's normalized whitespace tokens
-SELECT 'gate', doc_id,
+SELECT doc_id,
        CAST(b0 + 2*b1 + 4*b2 + 8*b3 + 16*b4 AS INTEGER),
        CAST(CASE WHEN b0 + b1 + b2 + b3 + b4 = 0
             THEN 1 ELSE 0 END AS INTEGER),
@@ -6191,23 +6048,24 @@ FROM (
       FROM documents
     )
   )
-)
-UNION ALL
--- capdup: caption LSH propose + Jaccard verify + dHash Hamming confirm;
+)""",
+            f"""-- capdup: caption LSH propose + Jaccard verify + dHash Hamming confirm;
 -- hamming rides frame_idx, jaccard rides pixel_mean, id_b rides
 -- pixel_min
-SELECT 'capdup', id_a, CAST(hamming AS INTEGER), CAST(-1 AS INTEGER),
+SELECT id_a, CAST(hamming AS INTEGER), CAST(-1 AS INTEGER),
        CAST(-1 AS INTEGER), CAST(-1 AS INTEGER), CAST(-1 AS INTEGER),
        CAST(-1 AS INTEGER), CAST(-1 AS INTEGER), CAST(jaccard AS DOUBLE),
        CAST(id_b AS INTEGER), CAST(-1 AS INTEGER)
 FROM ({capdup_sql}) cap_v
-"""
+""",
+        )
     return o
 
 
-def _code_oracle_union() -> str:
-    """The code-curation branches appended to the x4 oracle: every
-    expected output (stripped text, normalized text, SPDX verdict,
+def _code_oracles() -> tuple[str, list[str]]:
+    """The code-curation branches of the x4 oracle, as the CTEs they
+    read (continuing x4's WITH chain) and their six untagged selects:
+    every expected output (stripped text, normalized text, SPDX verdict,
     function chunks, clone groups, near-miss pairs) rebuilt
     CLOSED-FORM from the doc_id salt formulas — the oracle never runs
     a regex over the code, so a hash match proves the engine's real
@@ -6265,100 +6123,93 @@ def _code_oracle_union() -> str:
         )
         for b in range(4)
     )
-    return f"""
-UNION ALL
-SELECT cvariant, cdoc, cfp FROM (
-  WITH cfx AS (
-    SELECT doc_id,
-           CAST(doc_id % 7 AS VARCHAR) AS a,
-           CAST(doc_id % 100 AS VARCHAR) AS n,
-           doc_id % 5 AS h, doc_id % 3 AS s1,
-           (doc_id // 3) % 3 AS s2, (doc_id // 7) % 3 AS e
-    FROM documents
-  ), craw AS (
-    SELECT doc_id, h, e,
-      CASE h WHEN 0 THEN e'// SPDX-License-Identifier: MIT\\n'
-             WHEN 1 THEN e'# SPDX-License-Identifier: Apache-2.0\\n'
-             WHEN 2 THEN e'/* Permission is hereby granted,\\n free of charge */\\n'
-             WHEN 3 THEN e'// (c) 2026 Example Corp\\n'
-             ELSE '' END AS hdr_r,
-      {tpl_raw("s1")} AS fn1_r,
-      {tpl_raw("s2")} AS fn2_r,
-      {tpl_strip("s1")} AS fn1_s,
-      {tpl_strip("s2")} AS fn2_s,
-      {tpl_norm("s1")} AS fn1_n,
-      {tpl_norm("s2")} AS fn2_n,
-      repeat(e'    return 0\\n', CAST(e AS INTEGER)) AS ex_r,
-      repeat(e'    return N\\n', CAST(e AS INTEGER)) AS ex_n
-    FROM cfx
-  ), cdx AS (
-    SELECT doc_id, h,
-           hdr_r || fn1_r || ex_r || fn2_r AS raw,
-           (CASE WHEN h <= 3 THEN e'\\n' ELSE '' END)
-             || fn1_s || ex_r || fn2_s AS strp,
-           (CASE WHEN h <= 3 THEN e'\\n' ELSE '' END)
-             || fn1_n || ex_n || fn2_n AS nrm
-    FROM craw
-  ), cchunk AS (
-    SELECT doc_id, doc_id * 10 AS cid, fn1_n || ex_n AS cn FROM craw
-    UNION ALL
-    SELECT doc_id, doc_id * 10 + 1, fn2_n FROM craw
-  ), ntok AS (
-    SELECT cid,
-           string_split(trim(regexp_replace(lower(cn), '\\s+', ' ', 'g')),
-                        ' ') AS t
-    FROM cchunk WHERE doc_id % 20 = 0
-  ), nsh AS (
-    SELECT cid,
-           CASE WHEN len(t) >= 3
-                THEN list_distinct([array_to_string(t[i:i+2], ' ')
-                                    for i in generate_series(1, len(t) - 2)])
-                ELSE [array_to_string(t, ' ')] END AS sh
-    FROM ntok
-  ), nsig AS (
-    SELECT cid, [{mh}] AS minhash FROM nsh
-  ), nbands AS (
-{bands}
-  ), nfb AS (
-    SELECT nbands.* FROM nbands
-    JOIN (SELECT band_id, band_hash FROM nbands
-          GROUP BY 1, 2 HAVING COUNT(*) <= 1024) ok
-    USING (band_id, band_hash)
-  ), ncand AS (
-    SELECT DISTINCT x.cid AS id_a, y.cid AS id_b
-    FROM nfb x JOIN nfb y USING (band_id, band_hash)
-    WHERE x.cid < y.cid
-  ), njac AS (
-    SELECT id_a, id_b, jaccard FROM (
-      SELECT id_a, id_b,
-             ROUND(len(list_intersect(x.sh, y.sh))::DOUBLE
-                   / len(list_distinct(x.sh || y.sh)), 6) AS jaccard
-      FROM ncand JOIN nsh x ON x.cid = id_a JOIN nsh y ON y.cid = id_b
-    ) WHERE jaccard >= 0.5
-  )
-  SELECT 'codespdx' AS cvariant, doc_id AS cdoc,
-         CASE h WHEN 0 THEN 'MIT|mit|1'
-                WHEN 1 THEN 'Apache-2.0|apache|1'
-                WHEN 2 THEN '-|mit|1'
-                ELSE '-|none|0' END AS cfp
+    ctes = f""", cfx AS (
+  SELECT doc_id,
+         CAST(doc_id % 7 AS VARCHAR) AS a,
+         CAST(doc_id % 100 AS VARCHAR) AS n,
+         doc_id % 5 AS h, doc_id % 3 AS s1,
+         (doc_id // 3) % 3 AS s2, (doc_id // 7) % 3 AS e
+  FROM documents
+), craw AS (
+  SELECT doc_id, h, e,
+    CASE h WHEN 0 THEN e'// SPDX-License-Identifier: MIT\\n'
+           WHEN 1 THEN e'# SPDX-License-Identifier: Apache-2.0\\n'
+           WHEN 2 THEN e'/* Permission is hereby granted,\\n free of charge */\\n'
+           WHEN 3 THEN e'// (c) 2026 Example Corp\\n'
+           ELSE '' END AS hdr_r,
+    {tpl_raw("s1")} AS fn1_r,
+    {tpl_raw("s2")} AS fn2_r,
+    {tpl_strip("s1")} AS fn1_s,
+    {tpl_strip("s2")} AS fn2_s,
+    {tpl_norm("s1")} AS fn1_n,
+    {tpl_norm("s2")} AS fn2_n,
+    repeat(e'    return 0\\n', CAST(e AS INTEGER)) AS ex_r,
+    repeat(e'    return N\\n', CAST(e AS INTEGER)) AS ex_n
+  FROM cfx
+), cdx AS (
+  SELECT doc_id, h,
+         hdr_r || fn1_r || ex_r || fn2_r AS raw,
+         (CASE WHEN h <= 3 THEN e'\\n' ELSE '' END)
+           || fn1_s || ex_r || fn2_s AS strp,
+         (CASE WHEN h <= 3 THEN e'\\n' ELSE '' END)
+           || fn1_n || ex_n || fn2_n AS nrm
   FROM craw
+), cchunk AS (
+  SELECT doc_id, doc_id * 10 AS cid, fn1_n || ex_n AS cn FROM craw
   UNION ALL
-  SELECT 'codestrip', doc_id,
-         printf('%d:%d:%s', length(raw), length(raw) - length(strp),
-                md5(strp))
-  FROM cdx
-  UNION ALL
-  SELECT 'codenorm', doc_id, md5(nrm) FROM cdx
-  UNION ALL
-  SELECT 'codefn', cid, md5(cn) FROM cchunk
-  UNION ALL
-  SELECT 'codeclone', MIN(cid),
-         md5(cn) || ':' || CAST(COUNT(*) AS VARCHAR)
-  FROM cchunk GROUP BY cn
-  UNION ALL
-  SELECT 'codenear', id_a, printf('%d:%.6f', id_b, jaccard) FROM njac
-) code_v
+  SELECT doc_id, doc_id * 10 + 1, fn2_n FROM craw
+), ntok AS (
+  SELECT cid,
+         string_split(trim(regexp_replace(lower(cn), '\\s+', ' ', 'g')),
+                      ' ') AS t
+  FROM cchunk WHERE doc_id % 20 = 0
+), nsh AS (
+  SELECT cid,
+         CASE WHEN len(t) >= 3
+              THEN list_distinct([array_to_string(t[i:i+2], ' ')
+                                  for i in generate_series(1, len(t) - 2)])
+              ELSE [array_to_string(t, ' ')] END AS sh
+  FROM ntok
+), nsig AS (
+  SELECT cid, [{mh}] AS minhash FROM nsh
+), nbands AS (
+{bands}
+), nfb AS (
+  SELECT nbands.* FROM nbands
+  JOIN (SELECT band_id, band_hash FROM nbands
+        GROUP BY 1, 2 HAVING COUNT(*) <= 1024) ok
+  USING (band_id, band_hash)
+), ncand AS (
+  SELECT DISTINCT x.cid AS id_a, y.cid AS id_b
+  FROM nfb x JOIN nfb y USING (band_id, band_hash)
+  WHERE x.cid < y.cid
+), njac AS (
+  SELECT id_a, id_b, jaccard FROM (
+    SELECT id_a, id_b,
+           ROUND(len(list_intersect(x.sh, y.sh))::DOUBLE
+                 / len(list_distinct(x.sh || y.sh)), 6) AS jaccard
+    FROM ncand JOIN nsh x ON x.cid = id_a JOIN nsh y ON y.cid = id_b
+  ) WHERE jaccard >= 0.5
+)
 """
+    return ctes, [
+        """SELECT doc_id,
+       CASE h WHEN 0 THEN 'MIT|mit|1'
+              WHEN 1 THEN 'Apache-2.0|apache|1'
+              WHEN 2 THEN '-|mit|1'
+              ELSE '-|none|0' END AS fp
+FROM craw""",
+        """SELECT doc_id,
+       printf('%d:%d:%s', length(raw), length(raw) - length(strp),
+              md5(strp))
+FROM cdx""",
+        "SELECT doc_id, md5(nrm) FROM cdx",
+        "SELECT cid, md5(cn) FROM cchunk",
+        """SELECT MIN(cid),
+       md5(cn) || ':' || CAST(COUNT(*) AS VARCHAR)
+FROM cchunk GROUP BY cn""",
+        "SELECT id_a, printf('%d:%.6f', id_b, jaccard) FROM njac",
+    ]
 
 
 def _text_oracles() -> dict[str, str]:
@@ -6526,7 +6377,7 @@ qsf AS MATERIALIZED (
         "max_tokens", "mean_tokens", "hp25", "hp50", "hp75", "hp95",
     ]
     _x6_length_rows = "\nUNION ALL\n".join(
-        f"SELECT 'length' AS variant, '{m}' AS name, "
+        f"SELECT '{m}' AS name, "
         f"ROUND(CAST({m} AS DOUBLE), 6) AS value, "
         f"CAST(-1 AS BIGINT) AS n, CAST(-1 AS BIGINT) AS total FROM wide"
         for m in _x6_metrics
@@ -6553,13 +6404,13 @@ qsf AS MATERIALIZED (
         for i, (_, cond) in enumerate(_x6_scalar_rules)
     )
     _x6_rule_rows = "\nUNION ALL\n".join(
-        f"SELECT 'constraint', '{label}', "
+        f"SELECT '{label}', "
         f"CASE WHEN v{i} = 0 THEN 1.0 ELSE 0.0 END, "
         f"CAST(v{i} AS BIGINT), CAST(ototal AS BIGINT) FROM ocnt"
         for i, (label, _) in enumerate(_x6_scalar_rules)
     )
     _x6_uniq_rows = "\nUNION ALL\n".join(
-        f"""SELECT 'constraint', 'unique:{c}',
+        f"""SELECT 'unique:{c}',
        CASE WHEN v = 0 THEN 1.0 ELSE 0.0 END, CAST(v AS BIGINT),
        CAST(tot AS BIGINT)
 FROM (
@@ -6569,6 +6420,15 @@ FROM (
 )"""
         for c in ("o_orderkey", "o_custkey")
     )
+    # one replay serves the batch build ('qsketch') AND the landed
+    # streaming store ('qstream'): a single availableNow micro-batch
+    # lands the one-shot sketch bit-identically
+    x6_quantile_rows = """SELECT 'p' || CAST(pp AS VARCHAR), CAST(MIN(value) AS DOUBLE),
+       CAST(MIN(wtot) AS BIGINT), CAST(MIN(nrows) AS BIGINT)
+FROM zqcum CROSS JOIN (VALUES (25), (50), (75), (90)) AS ps(pp)
+WHERE cum * 100 >= pp * wtot
+GROUP BY pp
+"""
     o["x6_quality_gates"] = (
         t_cte
         + f""", zqcnt AS MATERIALIZED (
@@ -6708,43 +6568,39 @@ qlab AS MATERIALIZED (
 qnd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nd FROM documents),
 qw0 AS (SELECT CAST(NULL AS INTEGER) AS bucket, CAST(NULL AS DOUBLE) AS w WHERE FALSE)
 {_x6_qlr_iters}
-{_x6_length_rows}
+"""
+        + sql_union(
+            "x6_quality_gates",
+            f"""{_x6_length_rows}""",
+            f"""{_x6_rule_rows}
 UNION ALL
-{_x6_rule_rows}
-UNION ALL
-{_x6_uniq_rows}
-UNION ALL
-SELECT 'skew', CAST(l_suppkey AS VARCHAR),
+{_x6_uniq_rows}""",
+            """SELECT CAST(l_suppkey AS VARCHAR),
        ROUND(n_rows / CAST(total AS DOUBLE), 6), CAST(n_rows AS BIGINT),
        CAST(total AS BIGINT)
-FROM sktop CROSS JOIN sktot WHERE rn <= 20
-UNION ALL
-SELECT 'salted', CAST(s_nationkey AS VARCHAR),
+FROM sktop CROSS JOIN sktot WHERE rn <= 20""",
+            """SELECT CAST(s_nationkey AS VARCHAR),
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2),
        CAST(COUNT(*) AS BIGINT), CAST(-1 AS BIGINT)
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-GROUP BY s_nationkey
-UNION ALL
-SELECT 'dsir', CAST(doc_id AS VARCHAR), log_weight,
+GROUP BY s_nationkey""",
+            """SELECT CAST(doc_id AS VARCHAR), log_weight,
        CAST(n_grams AS BIGINT),
        CAST(CASE WHEN doc_id IN (SELECT doc_id FROM dtop)
                  THEN 1 ELSE 0 END AS BIGINT)
-FROM dw
-UNION ALL
-SELECT 'qlrw', CAST(bucket AS VARCHAR), w,
+FROM dw""",
+            """SELECT CAST(bucket AS VARCHAR), w,
        CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
-FROM qw3
-UNION ALL
--- logit, not sigmoid: exp() is libm-dependent (sf0.1 knife edge);
+FROM qw3""",
+            """-- logit, not sigmoid: exp() is libm-dependent (sf0.1 knife edge);
 -- score >= 0 is exactly prob >= 0.5
-SELECT 'qlr', CAST(qsf.doc_id AS VARCHAR),
+SELECT CAST(qsf.doc_id AS VARCHAR),
        s,
        CAST(y AS BIGINT),
        CAST(CASE WHEN s >= 0 THEN 1 ELSE 0 END AS BIGINT)
-FROM qsf JOIN qlab ON qsf.doc_id = qlab.doc_id
-UNION ALL
--- Gopher rule bundle (Rae et al. 2112.11446): per-doc failure bitmask
-SELECT 'gopher', CAST(doc_id AS VARCHAR), CAST(mask AS DOUBLE),
+FROM qsf JOIN qlab ON qsf.doc_id = qlab.doc_id""",
+            """-- Gopher rule bundle (Rae et al. 2112.11446): per-doc failure bitmask
+SELECT CAST(doc_id AS VARCHAR), CAST(mask AS DOUBLE),
        CAST(wc AS BIGINT), CAST(CASE WHEN mask = 0 THEN 1 ELSE 0 END AS BIGINT)
 FROM (
   SELECT doc_id, wc,
@@ -6768,10 +6624,9 @@ FROM (
                                  GROUP BY w))::DOUBLE / len(toks), 6) AS ts
     FROM t
   )
-)
-UNION ALL
--- C4 bad-words gate: exact-token blocklist over the normalized tokens
-SELECT 'blocklist', CAST(doc_id AS VARCHAR),
+)""",
+            """-- C4 bad-words gate: exact-token blocklist over the normalized tokens
+SELECT CAST(doc_id AS VARCHAR),
        CASE WHEN text IS NULL OR len(toks) = 0 THEN 0.0
             ELSE ROUND(len(list_filter(toks, tk -> tk IN ('dup', 'legacy')))
                        / CAST(len(toks) AS DOUBLE), 6) END,
@@ -6780,16 +6635,14 @@ SELECT 'blocklist', CAST(doc_id AS VARCHAR),
        CAST(CASE WHEN text IS NOT NULL
                   AND len(list_filter(toks, tk -> tk IN ('dup', 'legacy'))) = 0
                  THEN 1 ELSE 0 END AS BIGINT)
-FROM t
-UNION ALL
--- signals: the one-pass per-doc quality-signal EXPORT row
+FROM t""",
+            """-- signals: the one-pass per-doc quality-signal EXPORT row
 -- (text.quality_signal_export) — the same gopher + blocklist
 -- arithmetic packed per doc, so the hash verifies every signal value
 -- (n_chars, mean word len, top share, blocked frac/count, mask, pass
 -- bits) of the wide row the curation run would land for offline
 -- threshold tuning
-SELECT 'signals',
-       printf('%d:%d:%.6f:%.6f:%.6f:%d', doc_id, nchars,
+SELECT printf('%d:%d:%.6f:%.6f:%.6f:%d', doc_id, nchars,
               ROUND(mwl, 6), ts, bf, nb),
        CAST(mask AS DOUBLE),
        CAST(wc AS BIGINT),
@@ -6826,11 +6679,10 @@ FROM (
            ELSE len(list_filter(toks, tk -> tk IN ('dup', 'legacy'))) END AS nb
     FROM t
   )
-)
-UNION ALL
--- assert_constraints gate decisions: the gate raises iff any rule in
+)""",
+            """-- assert_constraints gate decisions: the gate raises iff any rule in
 -- its set fails on the data (value = raised, n = failing-rule count)
-SELECT 'gate', 'gate_pass',
+SELECT 'gate_pass',
        CASE WHEN nf > 0 THEN 1.0 ELSE 0.0 END,
        CAST(nf AS BIGINT), CAST(2 AS BIGINT)
 FROM (
@@ -6841,7 +6693,7 @@ FROM (
                THEN 1 ELSE 0 END) AS nf
 )
 UNION ALL
-SELECT 'gate', 'gate_raise',
+SELECT 'gate_raise',
        CASE WHEN nf > 0 THEN 1.0 ELSE 0.0 END,
        CAST(nf AS BIGINT), CAST(2 AS BIGINT)
 FROM (
@@ -6850,11 +6702,10 @@ FROM (
        + (CASE WHEN EXISTS(SELECT 1 FROM orders
                            WHERE NOT (o_orderkey % 7 != 0))
                THEN 1 ELSE 0 END) AS nf
-)
-UNION ALL
--- html strip replay: salted wrappers -> block/tag/entity/whitespace
+)""",
+            """-- html strip replay: salted wrappers -> block/tag/entity/whitespace
 -- chain; md5 of the cleaned text rides the name column
-SELECT 'html', CAST(doc_id AS VARCHAR) || ':' || md5(COALESCE(clean, '')),
+SELECT CAST(doc_id AS VARCHAR) || ':' || md5(COALESCE(clean, '')),
        CAST(CASE WHEN length(raw) > 0
                  THEN (length(raw) - length(clean)) * 1000000 // length(raw)
                  ELSE 0 END AS DOUBLE),
@@ -6888,12 +6739,11 @@ FROM (
         ELSE text END AS raw
     FROM documents
   )
-)
-UNION ALL
--- mojibake repair replay: the identical replace chain (generated from
+)""",
+            f"""-- mojibake repair replay: the identical replace chain (generated from
 -- the SAME MOJIBAKE_PAIRS table at import) over the same corrupted
 -- salts; md5 of the repaired text rides the name column
-SELECT 'mojibake', CAST(doc_id AS VARCHAR) || ':' || md5(COALESCE(rep, '')),
+SELECT CAST(doc_id AS VARCHAR) || ':' || md5(COALESCE(rep, '')),
        CAST(COALESCE(length(mraw) - length(rep), 0) AS DOUBLE),
        CAST(COALESCE(length(rep), 0) AS BIGINT),
        CAST(CASE WHEN COALESCE(length(mraw) - length(rep), 0) > 0
@@ -6908,12 +6758,11 @@ FROM (
         ELSE '' END AS mraw
     FROM documents WHERE doc_id % 5 = 0
   )
-)
-UNION ALL
--- NFC replay: DuckDB's nfc_normalize against the engine's Arrow
+)""",
+            f"""-- NFC replay: DuckDB's nfc_normalize against the engine's Arrow
 -- unicodedata pass (both UAX #15); md5 of the canonical text rides
 -- the name, lengths are code points in both engines
-SELECT 'nfc', CAST(doc_id AS VARCHAR) || ':' || md5(COALESCE(nfcv, '')),
+SELECT CAST(doc_id AS VARCHAR) || ':' || md5(COALESCE(nfcv, '')),
        CAST(COALESCE(length(nraw) - length(nfcv), 0) AS DOUBLE),
        CAST(COALESCE(length(nfcv), 0) AS BIGINT),
        CAST(CASE WHEN nraw IS DISTINCT FROM nfcv THEN 1 ELSE 0 END AS BIGINT)
@@ -6927,18 +6776,10 @@ FROM (
         ELSE '' END AS nraw
     FROM documents WHERE doc_id % 7 = 0
   )
-)
-UNION ALL
--- one replay serves the batch build ('qsketch') AND the landed
--- streaming store ('qstream'): a single availableNow micro-batch
--- lands the one-shot sketch bit-identically
-SELECT qv.qvariant, 'p' || CAST(pp AS VARCHAR), CAST(MIN(value) AS DOUBLE),
-       CAST(MIN(wtot) AS BIGINT), CAST(MIN(nrows) AS BIGINT)
-FROM zqcum CROSS JOIN (VALUES (25), (50), (75), (90)) AS ps(pp)
-CROSS JOIN (VALUES ('qsketch'), ('qstream')) AS qv(qvariant)
-WHERE cum * 100 >= pp * wtot
-GROUP BY qv.qvariant, pp
-"""
+)""",
+            x6_quantile_rows,
+            x6_quantile_rows,
+        )
     )
     # Tagged union mirroring _x7: raw LM scores ('score') ⊕ the CCNet
     # perplexity terciles ('ccnet').  lmsc is MATERIALIZED — both
@@ -6990,20 +6831,21 @@ GROUP BY qv.qvariant, pp
 ), ktot AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS tt FROM kcont
 )
-SELECT 'score' AS variant, doc_id, n_bigrams, avg_logprob AS score,
+"""
+        + sql_union(
+            "x7_bigram_logprob",
+            """SELECT doc_id, n_bigrams, avg_logprob AS score,
        '' AS bucket
-FROM lmsc
-UNION ALL
-SELECT 'ccnet', doc_id, n_bigrams, ROUND(exp(-avg_logprob), 2),
+FROM lmsc""",
+            """SELECT doc_id, n_bigrams, ROUND(exp(-avg_logprob), 2),
        CASE WHEN avg_logprob >= t2 THEN 'head'
             WHEN avg_logprob >= t1 THEN 'middle'
             ELSE 'tail' END
-FROM lmsc CROSS JOIN th
-UNION ALL
--- kn3: interpolated Kneser-Ney trigram replay (D = 1/2, integer
+FROM lmsc CROSS JOIN th""",
+            """-- kn3: interpolated Kneser-Ney trigram replay (D = 1/2, integer
 -- micro-units, lower orders from trigram-type continuation counts) —
 -- every quantity non-negative, so // mirrors Spark's div exactly
-SELECT 'kn3', doc_id, CAST(COUNT(*) AS BIGINT),
+SELECT doc_id, CAST(COUNT(*) AS BIGINT),
        CAST(CAST(SUM(p3) AS BIGINT) // COUNT(*) AS DOUBLE),
        CAST(CAST(SUM(p3) AS BIGINT) AS VARCHAR)
 FROM (
@@ -7025,7 +6867,8 @@ FROM (
   )
 )
 GROUP BY doc_id
-"""
+""",
+        )
     )
     # x4 union: the doc-min fingerprint ('docmin', one row per doc,
     # window=8 grams of the whole doc) ⊕ the FULL Schleimer-et-al.
@@ -7101,18 +6944,21 @@ GROUP BY doc_id
   SELECT doc_id, len(string_split(ltext, chr(10))) AS nl FROM lined
 )
 """
+    code_ctes, code_selects = _code_oracles()
     o["x4_winnowing_fingerprint"] = (
         t_cte
         + dup_cte
-        + """SELECT 'docmin' AS variant, doc_id,
+        + code_ctes
+        + sql_union(
+            "x4_winnowing_fingerprint",
+            """SELECT doc_id,
        CASE WHEN len(toks) >= 8
             THEN list_aggregate(
                    [md5(array_to_string(toks[i:i+7], ' '))
                     for i in generate_series(1, len(toks) - 7)], 'min')
             ELSE md5(array_to_string(toks, ' ')) END AS fp
-FROM t
-UNION ALL
-SELECT 'full', doc_id, unnest(
+FROM t""",
+            """SELECT doc_id, unnest(
     CASE WHEN len(toks) >= 8
          THEN list_distinct([
                 list_aggregate(
@@ -7120,36 +6966,31 @@ SELECT 'full', doc_id, unnest(
                    for j in generate_series(0, 3)], 'min')
                 for i in generate_series(1, len(toks) - 7)])
          ELSE [md5(array_to_string(toks, ' '))] END) AS fp
-FROM t
-UNION ALL
-SELECT 'dupspan', doc_id, gram || ':' || CAST(pos AS VARCHAR) AS fp
-FROM docc
-UNION ALL
-SELECT 'dupfrac', doc_id,
+FROM t""",
+            """SELECT doc_id, gram || ':' || CAST(pos AS VARCHAR) AS fp
+FROM docc""",
+            """SELECT doc_id,
        printf('%d:%d:%d:%.6f',
               CAST(SUM(n_grams) AS BIGINT),
               COUNT(*),
               CAST(SUM(span_tokens) AS BIGINT),
               ROUND(SUM(span_tokens) / CAST(ANY_VALUE(n_toks) AS DOUBLE), 6))
          AS fp
-FROM dper GROUP BY doc_id
-UNION ALL
-SELECT 'trimmed', doc_id,
+FROM dper GROUP BY doc_id""",
+            """SELECT doc_id,
        -- array_to_string([]) is NULL in DuckDB but '' in Spark's
        -- array_join: coalesce so fully-duplicated docs hash md5('')
        CAST(n_toks - len(kept) AS VARCHAR) || ':'
          || md5(COALESCE(array_to_string(kept, ' '), '')) AS fp
-FROM dtrim
-UNION ALL
-SELECT 'linededup', t.doc_id,
+FROM dtrim""",
+            """SELECT t.doc_id,
        printf('%d:%d:%d:%s', t.nl, COALESCE(k.kept, 0),
               t.nl - COALESCE(k.kept, 0), md5(COALESCE(k.rebuilt, ''))) AS fp
-FROM ltot t LEFT JOIN lkept k USING (doc_id)
-UNION ALL
--- cdc: content-defined chunk boundaries (rolling 4-token window hash,
+FROM ltot t LEFT JOIN lkept k USING (doc_id)""",
+            """-- cdc: content-defined chunk boundaries (rolling 4-token window hash,
 -- first 8 md5 hex chars as a 32-bit int, boundary iff = 0 mod 8), then
 -- first-occurrence per chunk hash over (doc_id, chunk_idx) order
-SELECT 'cdc', doc_id,
+SELECT doc_id,
        printf('%d:%d:%d:%s:%d:%d', chunk_idx, s, l, h, n_occ,
               CAST(is_first AS INTEGER)) AS fp
 FROM (
@@ -7177,8 +7018,9 @@ FROM (
     ), unnest(generate_series(1, len(starts))) AS g(j)
   )
 )
-"""
-        + _code_oracle_union()
+""",
+            *code_selects,
+        )
     )
     o["x8_repetition_stats"] = (
         t_cte
@@ -7227,7 +7069,7 @@ scored AS (
   CROSS JOIN n
 ),
 tfidf_top AS (
-  SELECT 'tfidf' AS variant, doc_id, term, tfidf AS score, rank FROM (
+  SELECT doc_id, term, tfidf AS score, rank FROM (
     SELECT *, CAST(ROW_NUMBER() OVER (
         PARTITION BY doc_id ORDER BY tfidf DESC, term
       ) AS INTEGER) AS rank
@@ -7251,7 +7093,7 @@ bscored AS (
   GROUP BY p.doc_id
 ),
 btop AS (
-  SELECT 'bm25' AS variant, doc_id, 'spark vector hash' AS term, score,
+  SELECT doc_id, 'spark vector hash' AS term, score,
          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS INTEGER) AS rank
   FROM bscored QUALIFY rank <= 10
 ),
@@ -7282,15 +7124,18 @@ rrfsum AS (
   ) GROUP BY doc_id
 ),
 rrftop AS (
-  SELECT 'rrf' AS variant, doc_id, 'spark vector hash' AS term,
+  SELECT doc_id, 'spark vector hash' AS term,
          CAST(rrf AS DOUBLE) AS score,
          CAST(ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id) AS INTEGER) AS rank
   FROM rrfsum QUALIFY rank <= 10
 )
-SELECT * FROM tfidf_top
-UNION ALL SELECT * FROM btop
-UNION ALL SELECT * FROM rrftop
 """
+        + sql_union(
+            "x9_term_relevance",
+            "SELECT * FROM tfidf_top",
+            "SELECT * FROM btop",
+            "SELECT * FROM rrftop",
+        )
     )
     # x11 — vocab coverage: corpus token counts, top-k by (count desc,
     # token), rank + running share of ALL corpus tokens.
@@ -7343,7 +7188,7 @@ UNION ALL SELECT * FROM rrftop
   SELECT w, acc AS syms, cnt FROM f{t_i} WHERE len(rem) = 0
 )""")
     bpe_traj_union = "\nUNION ALL\n".join(
-        f"SELECT 'bpe' AS variant, l || ' ' || r AS term, CAST(n AS BIGINT) AS n, "
+        f"SELECT l || ' ' || r AS term, CAST(n AS BIGINT) AS n, "
         f"CAST({t_i} AS BIGINT) AS rank, -1.0 AS share FROM best{t_i}"
         for t_i in range(1, bpe_rounds + 1)
     )
@@ -7447,13 +7292,11 @@ ufinal AS MATERIALIZED (
 """
         + _uni_dp("uf", "ufinal")
     )
-    _x11_uni_union = """
-UNION ALL
-SELECT 'uvocab', piece, CAST(cnt AS BIGINT), CAST(urank AS BIGINT),
+    _x11_uni_selects = [
+        """SELECT piece, CAST(cnt AS BIGINT), CAST(urank AS BIGINT),
        CAST(cost AS DOUBLE)
-FROM ufinal
-UNION ALL
-SELECT 'unigram', array_to_string(ut, ' '), CAST(len(ut) AS BIGINT),
+FROM ufinal""",
+        """SELECT array_to_string(ut, ' '), CAST(len(ut) AS BIGINT),
        CAST(doc_id AS BIGINT), -1.0
 FROM (
   SELECT doc_id, flatten(list(ws ORDER BY pos)) AS ut
@@ -7463,7 +7306,20 @@ FROM (
     JOIN ufbest ON ufbest.w = toks[g.i]
     WHERE t.norm != ''
   ) GROUP BY doc_id
-)"""
+)""",
+    ]
+    # 'segment' = expression path, 'segmenta' = the Arrow mapInPandas
+    # production encoder; identical values by contract, so one replay
+    # serves both variants
+    x11_seg_rows = """SELECT array_to_string(bpe, ' '), CAST(len(bpe) AS BIGINT),
+       CAST(doc_id AS BIGINT), -1.0
+FROM docseg"""
+    # 'tokids' = one-shot batch encode, 'tokstream' = the landed
+    # availableNow StreamingTokenIdSink store; ids are a pure function of
+    # (text, frozen merges, frozen vocab), so one replay serves both
+    x11_id_rows = """SELECT array_to_string(ids, ' '), CAST(len(ids) AS BIGINT),
+       CAST(doc_id AS BIGINT), -1.0
+FROM docids"""
     o["x11_vocab_bpe"] = (
         t_cte.replace("WITH ", "WITH RECURSIVE ", 1)
         + ", "
@@ -7693,38 +7549,21 @@ sbinr AS (
 ),
 """
         + _x11_uni_ctes
-        + """
-SELECT 'vocab' AS variant, token AS term, CAST(count AS BIGINT) AS n,
+        + sql_union(
+            "x11_vocab_bpe",
+            """SELECT token AS term, CAST(count AS BIGINT) AS n,
        CAST(ROW_NUMBER() OVER (ORDER BY count DESC, token) AS BIGINT) AS rank,
        ROUND(CAST(SUM(count) OVER (ORDER BY count DESC, token
                                    ROWS UNBOUNDED PRECEDING) AS BIGINT)
              / CAST(tot AS DOUBLE), 6) AS share
-FROM top CROSS JOIN total
-UNION ALL
-"""
-        + bpe_traj_union
-        + f"""
-UNION ALL
-SELECT seg_variant, array_to_string(bpe, ' '), CAST(len(bpe) AS BIGINT),
-       CAST(doc_id AS BIGINT), -1.0
-FROM docseg
--- 'segment' = expression path, 'segmenta' = the Arrow mapInPandas
--- production encoder; identical values by contract, so one replay
--- serves both variants
-CROSS JOIN (VALUES ('segment'), ('segmenta')) AS sv(seg_variant)
-UNION ALL
-SELECT 'tokvocab', piece, cnt, tid, -1.0 FROM tvoc
-UNION ALL
--- 'tokids' = one-shot batch encode, 'tokstream' = the landed
--- availableNow StreamingTokenIdSink store; ids are a pure function of
--- (text, frozen merges, frozen vocab), so one replay serves both
-SELECT idv, array_to_string(ids, ' '), CAST(len(ids) AS BIGINT),
-       CAST(doc_id AS BIGINT), -1.0
-FROM docids
-CROSS JOIN (VALUES ('tokids'), ('tokstream')) AS iv(idv)
-UNION ALL
-SELECT 'tokbin',
-       array_to_string(realids
+FROM top CROSS JOIN total""",
+            bpe_traj_union,
+            x11_seg_rows,
+            x11_seg_rows,
+            "SELECT piece, cnt, tid, -1.0 FROM tvoc",
+            x11_id_rows,
+            x11_id_rows,
+            """SELECT array_to_string(realids
            || list_transform(generate_series(1, 512 - nreal),
                              x -> CAST(0 AS BIGINT)), ' ')
        || ' | ' ||
@@ -7741,10 +7580,8 @@ SELECT 'tokbin',
        CAST(nreal AS BIGINT),
        CAST(shard AS BIGINT) * 1000000 + bin_id,
        CAST(n_docs AS DOUBLE)
-FROM tbinr
-UNION ALL
-SELECT 'tokstats',
-       CAST(shard AS VARCHAR) || ':'
+FROM tbinr""",
+            """SELECT CAST(shard AS VARCHAR) || ':'
          || CAST(CAST(SUM(CASE WHEN len(allids) > 512 THEN 1 ELSE 0 END)
                  AS BIGINT) AS VARCHAR) || ':'
          || CAST(CAST(512 * COUNT(*) - SUM(nreal) AS BIGINT) AS VARCHAR),
@@ -7752,10 +7589,8 @@ SELECT 'tokstats',
        CAST(COUNT(*) AS BIGINT),
        CAST((1000 * CAST(SUM(nreal) AS BIGINT)) // (512 * COUNT(*)) AS DOUBLE)
 FROM (SELECT shard, LEAST(len(allids), 512) AS nreal, allids FROM tbin)
-GROUP BY shard
-UNION ALL
-SELECT 'sftbin',
-       array_to_string(realids
+GROUP BY shard""",
+            """SELECT array_to_string(realids
            || list_transform(generate_series(1, 4096 - nreal),
                              x -> CAST(0 AS BIGINT)), ' ')
        || ' | ' ||
@@ -7771,15 +7606,13 @@ SELECT 'sftbin',
        CAST(nreal AS BIGINT),
        CAST(shard AS BIGINT) * 1000000 + bin_id,
        CAST(n_docs AS DOUBLE)
-FROM sbinr
-UNION ALL
-SELECT 'wpvocab', piece, CAST(cnt AS BIGINT), CAST(rank AS BIGINT), 0.0
+FROM sbinr""",
+            """SELECT piece, CAST(cnt AS BIGINT), CAST(rank AS BIGINT), 0.0
 FROM wps
 UNION ALL
-SELECT 'wpvocab', '##' || piece, CAST(cnt AS BIGINT), CAST(rank AS BIGINT), 1.0
-FROM wpc
-UNION ALL
-SELECT 'wordpiece', array_to_string(wp, ' '), CAST(len(wp) AS BIGINT),
+SELECT '##' || piece, CAST(cnt AS BIGINT), CAST(rank AS BIGINT), 1.0
+FROM wpc""",
+            """SELECT array_to_string(wp, ' '), CAST(len(wp) AS BIGINT),
        CAST(doc_id AS BIGINT), -1.0
 FROM (
   SELECT doc_id, flatten(list(ws ORDER BY pos)) AS wp
@@ -7789,8 +7622,9 @@ FROM (
     JOIN wseg ON wseg.w = toks[g.i]
     WHERE t.norm != ''
   ) GROUP BY doc_id
-)"""
-        + _x11_uni_union
+)""",
+            *_x11_uni_selects,
+        )
     )
     # x10 — mergeable-sketch union (kmv ⊕ hll ⊕ cms): every branch is
     # deterministic integer arithmetic over the same 32-bit ring hash,
@@ -7847,11 +7681,8 @@ FROM (
     drift_ctes = _drift_sql("dl", "ca_lang", "cb_lang") + _drift_sql(
         "dsp", "ca_split", "cb_split"
     )
-    drift_selects = "".join(
-        f"""
-UNION ALL
-SELECT '{variant}' AS variant,
-       m || ':' || CAST(na AS VARCHAR) || ':' || CAST(nb AS VARCHAR),
+    def _drift_rows(tag: str) -> str:
+        return f"""SELECT m || ':' || CAST(na AS VARCHAR) || ':' || CAST(nb AS VARCHAR),
        v, CAST(-1 AS BIGINT)
 FROM (
   SELECT 'js' AS m, js AS v, na, nb FROM {tag}_sum
@@ -7859,13 +7690,12 @@ FROM (
   UNION ALL SELECT 'kl_ba', kl_ba, na, nb FROM {tag}_sum
 )
 UNION ALL
-SELECT '{variant}',
-       'bucket:' || CAST(ca AS VARCHAR) || ':' || CAST(cb AS VARCHAR),
+SELECT 'bucket:' || CAST(ca AS VARCHAR) || ':' || CAST(cb AS VARCHAR),
        v, CAST(bucket AS BIGINT)
 FROM {tag}_top"""
-        for tag, variant in (("dl", "drift_lang"), ("dsp", "drift_split"))
-    )
-    o["x10_cardinality_sketches"] = f"""
+
+    o["x10_cardinality_sketches"] = (
+        f"""
 WITH h AS (
   SELECT DISTINCT event_type,
          (((user_id % 4294967296) * 48271) % 4294967296 * 16807) % 4294967296 AS h
@@ -7877,7 +7707,7 @@ WITH h AS (
 ), kept AS (
   SELECT * FROM ranked WHERE rn <= 32
 ), kmv AS (
-  SELECT 'kmv' AS variant, event_type AS sketch_key,
+  SELECT event_type AS sketch_key,
          CASE WHEN COUNT(*) >= 32
               THEN ROUND((32 - 1.0) / (MAX(h) / 4294967296.0), 4)
               ELSE CAST(COUNT(*) AS DOUBLE) END AS estimate,
@@ -7910,7 +7740,7 @@ WITH h AS (
   FROM hreg
   GROUP BY event_type
 ), hll AS (
-  SELECT 'hll' AS variant, event_type AS sketch_key,
+  SELECT event_type AS sketch_key,
          ROUND(CASE WHEN CAST({_hll_alpha_m2} AS DOUBLE) / z <= 160.0 AND empty > 0
                     THEN 64.0 * LN(64.0 / empty)
                     ELSE CAST({_hll_alpha_m2} AS DOUBLE) / z END, 4) AS estimate,
@@ -7937,7 +7767,7 @@ WITH h AS (
 ), exact AS (
   SELECT user_id, COUNT(*) AS exact_cnt FROM events GROUP BY user_id
 ), cms AS (
-  SELECT 'cms' AS variant, CAST(est.user_id AS VARCHAR) AS sketch_key,
+  SELECT CAST(est.user_id AS VARCHAR) AS sketch_key,
          CAST(cms_estimate AS DOUBLE) AS estimate,
          exact_cnt AS detail
   FROM est JOIN exact ON est.user_id = exact.user_id
@@ -7961,7 +7791,7 @@ WITH h AS (
          CAST(SUM(in_a * in_b) AS BIGINT) AS n_both
   FROM okset GROUP BY ga, gb
 ), kmvset AS (
-  SELECT 'kmvset' AS variant, ga || '+' || gb AS sketch_key,
+  SELECT ga || '+' || gb AS sketch_key,
          ROUND((CASE WHEN n_kept >= 32
                      THEN ROUND((32 - 1.0) / (kth / 4294967296.0), 4)
                      ELSE CAST(n_kept AS DOUBLE) END)
@@ -7999,15 +7829,22 @@ ddh AS MATERIALIZED (
          SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS cb_split
   FROM ddg GROUP BY bucket
 ){drift_ctes}
-SELECT * FROM kmv
-UNION ALL SELECT * FROM hll
--- 'hllstream' = the landed availableNow StreamingHllSink register
--- store; register max-merge IS the HLL union, so the landed estimates
--- equal the batch ones and ONE replay serves both variants
-UNION ALL SELECT 'hllstream', sketch_key, estimate, detail FROM hll
-UNION ALL SELECT * FROM cms
-UNION ALL SELECT * FROM kmvset{drift_selects}
 """
+        # 'hllstream' = the landed availableNow StreamingHllSink register
+        # store; register max-merge IS the HLL union, so the landed
+        # estimates equal the batch ones and ONE replay serves both
+        # variants
+        + sql_union(
+            "x10_cardinality_sketches",
+            "SELECT * FROM kmv",
+            "SELECT * FROM hll",
+            "SELECT * FROM hll",
+            "SELECT * FROM cms",
+            "SELECT * FROM kmvset",
+            _drift_rows("dl"),
+            _drift_rows("dsp"),
+        )
+    )
     # x12 — PII redaction: rebuild the key's deterministic salted text
     # (email on doc_id%3, dashed phone on %4, IPv4 on %5), then replay
     # text.PII_PATTERNS — same regexes, same replacement order — so
@@ -8182,20 +8019,22 @@ FROM red
   SELECT doc_id, CAST(COUNT(*) AS INTEGER) AS n
   FROM ph WHERE all_set = 1 GROUP BY doc_id
 )
-SELECT 'exact' AS variant, t.doc_id,
+"""
+        + sql_union(
+            "x13_decontamination",
+            """SELECT t.doc_id,
        CAST(-1 AS BIGINT) AS partner,
        CAST(COALESCE(h.n, 0) AS DOUBLE) AS score,
        COALESCE(h.n, 0) > 0 AS contaminated
 FROM t LEFT JOIN hits h USING (doc_id)
-WHERE t.doc_id % 20 != 0
-UNION ALL
-SELECT 'bloom', t.doc_id, CAST(-1 AS BIGINT),
+WHERE t.doc_id % 20 != 0""",
+            """SELECT t.doc_id, CAST(-1 AS BIGINT),
        CAST(COALESCE(bh.n, 0) AS DOUBLE), COALESCE(bh.n, 0) > 0
 FROM t LEFT JOIN bhits bh USING (doc_id)
-WHERE t.doc_id % 20 != 0
-UNION ALL
-SELECT 'fuzzy', did, CAST(eid AS BIGINT), mj, TRUE FROM fpairs
-"""
+WHERE t.doc_id % 20 != 0""",
+            """SELECT did, CAST(eid AS BIGINT), mj, TRUE FROM fpairs
+""",
+        )
     )
     return o
 
@@ -8621,25 +8460,26 @@ SELECT query_id, vec_id, cosine, rank FROM (
         FROM sreach GROUP BY node) g
   JOIN sasg a USING (vec_id)
 )
-SELECT 'self' AS variant, id_a, id_b, cosine FROM (
+"""
+        + sql_union(
+            "s4_embedding_near_duplicates",
+            f"""SELECT id_a, id_b, cosine FROM (
   SELECT cand.id_a, cand.id_b, {cos('ea.embedding', 'eb.embedding')} AS cosine
   FROM cand
   JOIN embeddings ea ON ea.vec_id = cand.id_a
   JOIN embeddings eb ON eb.vec_id = cand.id_b
-) WHERE cosine >= 0.4
-UNION ALL
-SELECT 'decon', id_a, id_b, cosine FROM (
+) WHERE cosine >= 0.4""",
+            f"""SELECT id_a, id_b, cosine FROM (
   SELECT dcand.id_a, dcand.id_b, {cos('ea.embedding', 'eb.embedding')} AS cosine
   FROM dcand
   JOIN embeddings ea ON ea.vec_id = dcand.id_a
   JOIN embeddings eb ON eb.vec_id = dcand.id_b
-) WHERE cosine >= 0.3
-UNION ALL
-SELECT 'semgroup', vec_id AS id_a, group_id AS id_b, c2c AS cosine FROM smem
-UNION ALL
-SELECT 'semdrop', vec_id AS id_a, group_id AS id_b, c2c AS cosine
+) WHERE cosine >= 0.3""",
+            "SELECT vec_id AS id_a, group_id AS id_b, c2c AS cosine FROM smem",
+            """SELECT vec_id AS id_a, group_id AS id_b, c2c AS cosine
 FROM smem WHERE krn > 1
-"""
+""",
+        )
     )
 
     # s7: trained product quantization end-to-end — the shared
@@ -8830,22 +8670,22 @@ SELECT query_id, vec_id, cosine, rank FROM (
 ) WHERE rank <= 10
 """
     )
-    # One tagged union mirroring q["s1_knn"]: all six kNN paths share
-    # the (query_id, vec_id, score, rank) shape — score is cosine for
-    # brute/srp/ivf/pq_rerank/ivfpq and approximate squared L2 for the
-    # ADC-pure PQ path.
+    # One tagged union mirroring q["s1_knn"]: all six kNN paths (in
+    # _KNN_TAGS order) share the (query_id, vec_id, score, rank) shape —
+    # score is cosine for brute/srp/ivf/pq_rerank/ivfpq and approximate
+    # squared L2 for the ADC-pure PQ path.
     s1_bodies = [
-        ("brute", s1_sql, "cosine"),
-        ("srp16", s3_sql, "cosine"),
-        ("ivf16", s6_sql, "cosine"),
-        ("pq8x16", s7_sql, "adc_dist"),
-        ("pq_rerank", s8_sql, "cosine"),
-        ("ivfpq", s9_sql, "cosine"),
+        (s1_sql, "cosine"),
+        (s3_sql, "cosine"),
+        (s6_sql, "cosine"),
+        (s7_sql, "adc_dist"),
+        (s8_sql, "cosine"),
+        (s9_sql, "cosine"),
     ]
     # recall_* rows mirror similarity.recall_at_k_per_query: per-query
     # |method top-10 ∩ brute top-10| / |brute top-10|, rounded 6.
-    s1_recalls = "\nUNION ALL\n".join(
-        f"""SELECT 'recall_{tagname}' AS variant, b.query_id,
+    s1_recalls = [
+        f"""SELECT b.query_id,
        CAST(-1 AS BIGINT) AS vec_id,
        ROUND(CAST(COUNT(m.vec_id) AS DOUBLE) / COUNT(*), 6) AS score,
        CAST(-1 AS INTEGER) AS rank
@@ -8853,16 +8693,15 @@ FROM ({s1_sql}) b LEFT JOIN ({body}) m
   ON b.query_id = m.query_id AND b.vec_id = m.vec_id AND m.rank <= 10
 WHERE b.rank <= 10
 GROUP BY b.query_id"""
-        for tagname, body, _score in s1_bodies[1:]
-    )
-    o["s1_knn"] = (
-        "\nUNION ALL\n".join(
-            f"SELECT '{tagname}' AS variant, query_id, vec_id, "
-            f"{score} AS score, rank FROM ({body}) {tagname}_v"
-            for tagname, body, score in s1_bodies
-        )
-        + "\nUNION ALL\n"
-        + s1_recalls
+        for body, _score in s1_bodies[1:]
+    ]
+    o["s1_knn"] = sql_union(
+        "s1_knn",
+        *(
+            f"SELECT query_id, vec_id, {score} AS score, rank FROM ({body})"
+            for body, score in s1_bodies
+        ),
+        *s1_recalls,
     )
     return o
 
@@ -8919,21 +8758,20 @@ WITH norm AS (
     o: dict[str, str] = {}
     # d1 ⊕ d2 as one tagged union mirroring q["d1_exact_dedup"]:
     # survivors + duplicate groups (fingerprint rides text, size rides n).
-    o["d1_exact_dedup"] = f"""
-SELECT 'dedup' AS variant, doc_id, text,
+    o["d1_exact_dedup"] = sql_union(
+            "d1_exact_dedup",
+            f"""SELECT doc_id, text,
        lang || '|' || source AS info, CAST(n_chars AS BIGINT) AS n
 FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY md5({norm}) ORDER BY doc_id) AS rn
   FROM documents
-) WHERE rn = 1
-UNION ALL
-SELECT 'groups', keep_id, fingerprint, '', CAST(n_docs AS BIGINT) FROM (
+) WHERE rn = 1""",
+            f"""SELECT keep_id, fingerprint, '', CAST(n_docs AS BIGINT) FROM (
   SELECT md5({norm}) AS fingerprint, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
   FROM documents
   GROUP BY 1 HAVING COUNT(*) > 1
-)
-UNION ALL
-SELECT 'incremental', doc_id, text, lang || '|' || source,
+)""",
+            f"""SELECT doc_id, text, lang || '|' || source,
        CAST(n_chars AS BIGINT)
 FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY md5({norm})
@@ -8941,18 +8779,16 @@ FROM (
   FROM documents WHERE doc_id % 2 = 1
 ) WHERE rn = 1 AND md5({norm}) NOT IN (
   SELECT md5({norm}) FROM documents WHERE doc_id % 2 = 0
-)
-UNION ALL
-SELECT 'ids', MIN(doc_id), '', '', CAST(-1 AS BIGINT)
-FROM documents GROUP BY md5({norm})
-UNION ALL
--- 'url': URL-level dedup — salted adversarial raw URLs (mixed case,
+)""",
+            f"""SELECT MIN(doc_id), '', '', CAST(-1 AS BIGINT)
+FROM documents GROUP BY md5({norm})""",
+            """-- 'url': URL-level dedup — salted adversarial raw URLs (mixed case,
 -- default port, userinfo, tracking params, unsorted query, fragment,
 -- %-escape case) and the expected RFC-normal canonical form are both
 -- built from doc_id formulas; the engine runs the FULL
 -- canonicalize_url_col chain, so the hash proves the algorithm lands
 -- exactly on the formula form for every salt
-SELECT 'url', MIN(doc_id), canon, arg_min(url, doc_id), COUNT(*)
+SELECT MIN(doc_id), canon, arg_min(url, doc_id), COUNT(*)
 FROM (
   SELECT doc_id,
     CASE CAST(doc_id % 4 AS INTEGER)
@@ -8971,13 +8807,12 @@ FROM (
       ELSE 'http://example' || CAST(doc_id % 40 AS VARCHAR)
            || '.com/q%2F' || CAST(doc_id % 15 AS VARCHAR) END AS canon
   FROM documents
-) GROUP BY canon
-UNION ALL
--- 'host': host-level stats + gate over the same salted URLs — the
+) GROUP BY canon""",
+            """-- 'host': host-level stats + gate over the same salted URLs — the
 -- oracle rebuilds host and canonical from the formulas; the engine
 -- extracts them through the adversarial raw forms.  Gate policy:
 -- block when n_docs > 12 or dup share >= 700 permille.
-SELECT 'host', first_id, host,
+SELECT first_id, host,
        (CASE WHEN n_docs > 12 OR dup_permille >= 700
              THEN 'block' ELSE 'keep' END)
          || '|u=' || CAST(n_urls AS VARCHAR)
@@ -8999,9 +8834,8 @@ FROM (
              || '.com/q%2F' || CAST(doc_id % 15 AS VARCHAR) END AS canon
     FROM documents
   ) GROUP BY host
-)
-UNION ALL
--- 'robots': RFC 9309 verdicts computed CLOSED-FORM from the fixture
+)""",
+            """-- 'robots': RFC 9309 verdicts computed CLOSED-FORM from the fixture
 -- formulas (shape = host % 4): 0 = '/p1' prefix disallow rescued by
 -- the longer 'Allow: /p12'; 1 = specific-agent group overrides the
 -- block-everything * group, '$'-anchored '/p2$' blocks only pn=2;
@@ -9009,7 +8843,7 @@ UNION ALL
 -- 14; 3 = empty Disallow allows all.  The engine must parse the raw
 -- robots.txt (comments, CRLF, grouping, specificity, longest-match,
 -- anchors, wildcards) and land exactly here.
-SELECT 'robots', hn * 100 + pn,
+SELECT hn * 100 + pn,
        'h' || CAST(hn AS VARCHAR) || '.com',
        '/p' || CAST(pn AS VARCHAR) || '|' || CAST(al AS VARCHAR),
        CAST(al AS BIGINT)
@@ -9021,35 +8855,33 @@ FROM (
       WHEN 2 THEN CASE WHEN pn = 4 THEN 0 ELSE 1 END
       ELSE 1 END AS al
   FROM (SELECT DISTINCT doc_id % 40 AS hn, doc_id % 15 AS pn FROM documents)
-)
-UNION ALL
--- 'sitemap': crawl-frontier hand-off, closed-form — robots Sitemap:
+)""",
+            """-- 'sitemap': crawl-frontier hand-off, closed-form — robots Sitemap:
 -- declarations (2 per host) and the <loc> extraction (urlset w/
 -- padding+CDATA for even hosts, newline-embedded sitemapindex for
 -- odd); the engine must run the real directive/CDATA/trim regex
 -- chain and land exactly here
-SELECT 'sitemap', hn * 100 + i, 'h' || CAST(hn AS VARCHAR) || '.com',
+SELECT hn * 100 + i, 'h' || CAST(hn AS VARCHAR) || '.com',
        'https://h' || CAST(hn AS VARCHAR) || '.com/'
          || CASE i WHEN 0 THEN 'map.xml' ELSE 'map2.xml' END,
        CAST(0 AS BIGINT)
 FROM (SELECT DISTINCT doc_id % 40 AS hn FROM documents)
 CROSS JOIN (VALUES (0), (1)) AS si(i)
 UNION ALL
-SELECT 'sitemap', hn * 100 + 10 + j, 'h' || CAST(hn AS VARCHAR) || '.com',
+SELECT hn * 100 + 10 + j, 'h' || CAST(hn AS VARCHAR) || '.com',
        'https://h' || CAST(hn AS VARCHAR) || '.com/'
          || CASE WHEN hn % 2 = 0 THEN 's' || CAST(j AS VARCHAR)
                  ELSE 'm0.xml' END,
        CAST(1 AS BIGINT)
 FROM (SELECT DISTINCT doc_id % 40 AS hn FROM documents)
 CROSS JOIN (VALUES (0), (1)) AS sj(j)
-WHERE hn % 2 = 0 OR j = 0
-UNION ALL
--- 'pref': preference-pair dedup + stats over salted pairs — the
+WHERE hn % 2 = 0 OR j = 0""",
+            f"""-- 'pref': preference-pair dedup + stats over salted pairs — the
 -- fingerprint is md5 of the normalized (prompt, chosen, rejected)
 -- triple joined with chr(10); first occurrence by pair_id wins;
 -- stats are whitespace token counts, floor(1000*chosen/rejected),
 -- and the normalized chosen==rejected degenerate flag
-SELECT 'pref', pair_id, fp,
+SELECT pair_id, fp,
        CAST(pt AS VARCHAR) || '|' || CAST(ct AS VARCHAR)
          || '|' || CAST(CAST(FLOOR(1000.0 * ct / rt) AS BIGINT) AS VARCHAR)
          || '|' || CAST(CASE WHEN nc = nr THEN 1 ELSE 0 END AS VARCHAR),
@@ -9075,7 +8907,8 @@ FROM (
     )
   ) GROUP BY fp
 )
-"""
+""",
+        )
     # d4 rows carry the full signature string (the d3 stage) alongside
     # each band row, mirroring the Spark `carry` column.
     sig_band_selects = "\nUNION ALL\n".join(
@@ -9107,19 +8940,23 @@ FROM (
     FROM cand JOIN norm x ON x.doc_id = id_a JOIN norm y ON y.doc_id = id_b
   ) WHERE jaccard >= 0.6
 )
-SELECT 'lsh' AS variant, id_a, id_b, jaccard, CAST(NULL AS DOUBLE) AS cosine
-FROM jac
-UNION ALL
--- lexical ∧ semantic: the same pairs cross-checked by embedding cosine
-SELECT 'hybrid', id_a, id_b, jaccard, {cos64}
+"""
+        + sql_union(
+            "d5_minhash_near_duplicates",
+            """SELECT id_a, id_b, jaccard, CAST(NULL AS DOUBLE) AS cosine
+FROM jac""",
+            f"""-- lexical ∧ semantic: the same pairs cross-checked by embedding cosine
+SELECT id_a, id_b, jaccard, {cos64}
 FROM jac
 JOIN embeddings ea ON ea.vec_id = id_a
 JOIN embeddings eb ON eb.vec_id = id_b
 WHERE {cos64} >= 0.3
-"""
+""",
+        )
     )
     # 3-gram shingles over raw (non-distinct) token sequence
-    o["d6_ngram_jaccard_pairs"] = f"""
+    o["d6_ngram_jaccard_pairs"] = (
+        f"""
 WITH raw AS (
   -- deterministic 20% audit sample, mirroring the Spark key (the
   -- exact-audit operator is sample-scale by contract)
@@ -9149,16 +8986,20 @@ WITH raw AS (
     FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b
   ) WHERE jaccard >= 0.01
 )
-SELECT 'jaccard' AS variant, id_a, id_b, jaccard AS score FROM jac
-UNION ALL
--- order-sensitive Levenshtein audit over the near-dup slice
-SELECT 'edit', id_a, id_b,
+"""
+        + sql_union(
+            "d6_ngram_jaccard_pairs",
+            "SELECT id_a, id_b, jaccard AS score FROM jac",
+            """-- order-sensitive Levenshtein audit over the near-dup slice
+SELECT id_a, id_b,
        ROUND(1.0 - levenshtein(x.text, y.text)::DOUBLE
              / GREATEST(length(x.text), length(y.text)), 6)
 FROM jac JOIN documents x ON x.doc_id = id_a
          JOIN documents y ON y.doc_id = id_b
 WHERE jaccard >= 0.2
-"""
+""",
+        )
+    )
     sim_cte = (
         norm_cte
         + """, votes AS (
@@ -9200,17 +9041,20 @@ WHERE jaccard >= 0.2
   FROM fch a JOIN fch b USING (chunk_id, chunk)
   WHERE a.doc_id < b.doc_id
 )
-SELECT 'sig' AS variant, doc_id AS id_a, doc_id AS id_b,
+"""
+        + sql_union(
+            "d7_simhash",
+            """SELECT doc_id AS id_a, doc_id AS id_b,
        simhash AS detail, CAST(-1 AS INTEGER) AS hamming
-FROM sim
-UNION ALL
-SELECT 'pairs', id_a, id_b, '', hamming FROM (
+FROM sim""",
+            """SELECT id_a, id_b, '', hamming FROM (
   SELECT id_a, id_b,
          CAST(list_sum(list_transform(generate_series(1, 64),
               i -> CASE WHEN substr(sa, i, 1) != substr(sb, i, 1) THEN 1 ELSE 0 END)) AS INTEGER) AS hamming
   FROM pairs
 ) WHERE hamming <= 6
-"""
+""",
+        )
     )
     # d9 uses the steep 16-hash / 2-band×8-row curve (see
     # weighted_near_duplicates docstring) — its own sig/band/cand CTEs.

@@ -12,11 +12,19 @@ materialize but the driver isn't flooded.
 
 ``--all`` times EVERY ``queries()`` key (metric
 ``all_queries_total_wall_clock``) instead of the frozen 26-key
-headline set, and adds branch sub-timings for the heavyweight tagged
-unions (a11's TPC-H branches, x6's gate branches).  The headline set
-stays frozen for r1-baseline comparability; the full sweep is the
-regression tracker for the other keys — capture a row into
-BENCH_NOTES.md per round.
+headline set.  The headline set stays frozen for r1-baseline
+comparability; the full sweep is the regression tracker for the other
+keys — capture a row into BENCH_NOTES.md per round.
+
+Every tagged-union key that runs (``__spark_entry__.BRANCHES``) also
+gets per-branch sub-timings in ``meta.branches``: one extra filtered
+pass per branch AFTER the timed union passes.  ``variant = '<tag>'``
+is a literal-vs-literal predicate in every other union child, so
+Catalyst folds it to false and PropagateEmptyRelation prunes those
+children — the filtered run executes only the branch under test.
+Branch timings are diagnostic: their SUM exceeds the union's time
+where branches share a subplan (a pinned scan is paid once by the
+union but once per branch here).
 """
 
 from __future__ import annotations
@@ -71,61 +79,6 @@ HEADLINE = [
 ]
 
 
-# Tagged-union keys whose branches get individual sub-timings in
-# meta.branches: one extra filtered pass per branch AFTER the timed
-# union passes.  `variant = '<tag>'` is a literal-vs-literal predicate
-# in every other union child, so Catalyst folds it to false and
-# PropagateEmptyRelation prunes those children — the filtered run
-# executes only the branch under test.  Branch timings are diagnostic:
-# their SUM exceeds the union's time where branches share a subplan
-# (e.g. s1's pinned corpus scan is paid once by the union but once per
-# branch here).
-BRANCHES: dict[str, list[str]] = {
-    "q5_filtered_window_range": ["filtered_range", "window_all", "hopping"],
-    "s1_knn": ["brute", "srp16", "ivf16", "pq8x16", "pq_rerank", "ivfpq"],
-    "s4_embedding_near_duplicates": ["self", "decon", "semgroup"],
-    "x13_decontamination": ["exact", "bloom", "fuzzy"],
-    "p2_packing_chunking": ["pack", "chunk", "nostraddle", "chat", "fim", "span"],
-    "a6_asof_purchase_click": ["bwd", "fwd", "bwdtol"],
-    "d1_exact_dedup": [
-        "dedup", "groups", "incremental", "ids", "url", "host", "robots",
-        "sitemap", "pref",
-    ],
-    "t5_stock_aggregation": ["agg", "daily", "rolled", "hllmerge"],
-    "x4_winnowing_fingerprint": [
-        "docmin", "full", "dupspan", "dupfrac", "trimmed", "linededup", "cdc",
-        "codespdx", "codestrip", "codenorm", "codefn", "codeclone", "codenear",
-    ],
-    "m7_decoded_pixel_stats": [
-        "png", "apng", "resize", "dhash", "phash", "gate", "capdup",
-    ],
-}
-
-# Extra branch sub-timings captured only under --all: the heavyweight
-# unions outside the frozen headline set.
-ALL_BRANCHES: dict[str, list[str]] = {
-    "a11_revenue_kpis": [
-        "promo_ratio", "disjunctive", "q21", "q22cnt", "q22bal", "q17",
-        "q15", "q6", "q7", "q8", "q9", "q13", "q18", "q2", "q11", "q16",
-        "q20",
-    ],
-    "x6_quality_gates": [
-        "length", "constraint", "skew", "salted", "dsir", "qlrw", "qlr",
-        "gopher", "blocklist", "signals", "gate", "html", "mojibake", "nfc",
-        "qsketch", "qstream",
-    ],
-    "x11_vocab_bpe": [
-        "vocab", "bpe", "segment", "segmenta", "wpvocab", "wordpiece",
-        "uvocab", "unigram", "tokvocab", "tokids", "tokstream", "tokbin",
-        "tokstats", "sftbin",
-    ],
-    "e1_event_analytics": [
-        "funnel", "cohort", "interval", "pagerank", "trustrank", "hits",
-        "wpagerank", "gsum", "hyperball",
-    ],
-}
-
-
 # Scaling-credible second bench row (r11 verdict #2): the sf0.1 bench is
 # driver-bound (all 26 low-core/high-core ratios ≈ 1), so executor-side
 # wins are invisible to the headline numbers.  These keys re-run ONCE
@@ -155,7 +108,9 @@ STRESS16_FACTOR = int(os.environ.get("SPARK_GRAFT_BENCH_STRESS_FACTOR", "4"))
 def build_stress_corpus(spark, sf_dir: str, factor: int, out_dir: str) -> float:
     """Replicate documents/embeddings ``factor``× with shifted ids and
     perturbed content (replicas are near- but not exact-duplicates) into
-    ``out_dir``; returns build seconds.  Deterministic: no rand()."""
+    ``out_dir``; returns build seconds.  Deterministic: no rand().
+    Replica ``r`` shifts ids by ``r * (max(id) + 1)``, so ids stay unique
+    however sparse the source ids are."""
     from pyspark.sql import functions as F
 
     from kafkastreamsinteractivequeries_spark.sources.tables import load_table
@@ -163,11 +118,11 @@ def build_stress_corpus(spark, sf_dir: str, factor: int, out_dir: str) -> float:
     t0 = time.perf_counter()
     reps = spark.range(factor).withColumnRenamed("id", "_r")
     docs = load_table(spark, sf_dir, "documents")
-    ndoc = docs.count()
+    doc_span = docs.agg(F.max("doc_id")).first()[0] + 1
     (
         docs.crossJoin(reps)
         .select(
-            (F.col("doc_id") + F.col("_r") * ndoc).alias("doc_id"),
+            (F.col("doc_id") + F.col("_r") * doc_span).alias("doc_id"),
             F.when(F.col("_r") == 0, F.col("text"))
             .otherwise(F.concat(F.col("text"), F.lit(" rep"), F.col("_r")))
             .alias("text"),
@@ -177,11 +132,11 @@ def build_stress_corpus(spark, sf_dir: str, factor: int, out_dir: str) -> float:
         .parquet(os.path.join(out_dir, "documents.parquet"))
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    nemb = emb.count()
+    vec_span = emb.agg(F.max("vec_id")).first()[0] + 1
     (
         emb.crossJoin(reps)
         .select(
-            (F.col("vec_id") + F.col("_r") * nemb).alias("vec_id"),
+            (F.col("vec_id") + F.col("_r") * vec_span).alias("vec_id"),
             F.transform(
                 "embedding",
                 lambda x, i: (
@@ -389,25 +344,15 @@ def main() -> None:
         )
 
     # Per-branch sub-timings for the tagged-union keys (one filtered
-    # pass each; see BRANCHES docstring for semantics).
+    # pass each; see the module docstring for semantics).
     from pyspark.sql import functions as F
 
     branches: dict[str, dict[str, float]] = {}
-    # s1's driver key localCheckpoints the 5-way kNN union before its
-    # recall branches, and a checkpoint materializes ALL parents — a
-    # variant filter on the full key would bill every branch the whole
-    # union.  Time the kNN branches on the pre-checkpoint knn_union
-    # instead, where Catalyst's constant-fold + empty-relation pruning
-    # actually isolates the branch under test.
-    branch_source = {"s1_knn": entry_mod.knn_union}
-    branch_specs = dict(BRANCHES)
-    if run_all:
-        branch_specs.update(ALL_BRANCHES)
-    for name, tags in branch_specs.items():
-        if name not in names:
+    for name in names:
+        tags = entry_mod.BRANCHES.get(name)
+        if tags is None:
             continue
         branches[name] = {}
-        src = branch_source.get(name, queries[name])
         # Construct ONCE and bill construction separately ('_build'):
         # eager-checkpoint unions (e1, x6, x11) materialize trained
         # artifacts and iteration barriers at BUILD time, so
@@ -421,7 +366,7 @@ def main() -> None:
         # checkpointed ones each branch pays a (cheap) scan of the
         # materialized parents instead of their recomputation.
         t0 = time.perf_counter()
-        df = src(spark, sf_dir)
+        df = queries[name](spark, sf_dir)
         branches[name]["_build"] = round(time.perf_counter() - t0, 3)
         for tag in tags:
             t0 = time.perf_counter()

@@ -1138,8 +1138,12 @@ def ngram_decontaminate_bloom(
     idx = train.sparkSession.range(nwords).select(
         F.col("id").cast("int").alias("word_idx")
     )
+    # one word per index before the gap-fill: duplicate word_idx rows
+    # (e.g. filters built per shard and unioned) OR together instead of
+    # lengthening the array and shifting every later probe
+    words = bloom_words.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
     warr = (
-        idx.join(bloom_words, "word_idx", "left")
+        idx.join(words, "word_idx", "left")
         .agg(
             F.transform(
                 F.array_sort(

@@ -38,34 +38,14 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
-# The widest tagged unions: one driver hash covers every branch, so a
-# future mismatch wouldn't localize.  Assert per-branch row counts
+# Tagged unions: one driver hash covers every branch, so a future
+# mismatch wouldn't localize.  Assert per-branch row counts
 # Spark-vs-oracle so a regression names its branch without bisecting
-# the union.
+# the union.  Every BRANCHES key is tagged by `variant`; two more keys
+# tag their branches with a data column.
 UNION_KEYS = {
-    "s1_knn": "variant",
+    **{key: "variant" for key in entry_mod.BRANCHES},
     "s2_index_assignments": "index_kind",
-    "x10_cardinality_sketches": "variant",
-    "x13_decontamination": "variant",
-    "q5_filtered_window_range": "variant",
-    "d1_exact_dedup": "variant",
-    "x11_vocab_bpe": "variant",
-    "x4_winnowing_fingerprint": "variant",
-    "x6_quality_gates": "variant",
-    "s4_embedding_near_duplicates": "variant",
-    "e1_event_analytics": "variant",
-    "q3_range_query": "variant",
-    "q4_filtered_range": "variant",
-    "p3_sampling_split": "variant",
-    "x9_term_relevance": "variant",
-    "m7_decoded_pixel_stats": "variant",
-    "a11_revenue_kpis": "variant",
-    "d6_ngram_jaccard_pairs": "variant",
-    "d5_minhash_near_duplicates": "variant",
-    "a6_asof_purchase_click": "variant",
-    "x7_bigram_logprob": "variant",
-    "t5_stock_aggregation": "variant",
-    "e3_layout_keys": "variant",
     # media_type doubles as the union tag: the synthetic header rows
     # (image/audio/video) plus the parsed-JPEG rows (jpeg_baseline /
     # jpeg_progressive)
@@ -93,6 +73,8 @@ def test_union_branch_counts(spark, sf_dir, name):
     assert s_counts == o_counts, (
         f"{name} per-branch counts diverge: spark={s_counts} oracle={o_counts}"
     )
+    if name in entry_mod.BRANCHES:
+        assert set(s_counts) <= set(entry_mod.BRANCHES[name]), sorted(s_counts)
 
 
 def test_harness_rejects_out_of_range_timestamps(spark, sf_dir):

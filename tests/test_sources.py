@@ -62,6 +62,30 @@ def test_write_corpus_parquet_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
+def test_load_table_memo_replaces_regenerated_table(spark, tmp_path):
+    """A table regenerated in-process at the same path is re-read (never
+    a stale plan) and REPLACES its memo entry: the per-session memo
+    holds one entry per path however often the corpus is rewritten."""
+    from kafkastreamsinteractivequeries_spark.sources import tables
+
+    memo = tables._TABLE_MEMO.setdefault(spark, {})
+    path = str(tmp_path / "documents.parquet")
+    seen = []
+    for gen in range(3):
+        spark.createDataFrame(
+            [(i, f"gen{gen} doc {i}") for i in range(gen + 2)],
+            "doc_id long, text string",
+        ).write.mode("overwrite").parquet(path)
+        df = tables.load_table(spark, str(tmp_path), "documents")
+        assert sorted(r["text"] for r in df.collect()) == [
+            f"gen{gen} doc {i}" for i in range(gen + 2)
+        ]
+        assert tables.load_table(spark, str(tmp_path), "documents") is df
+        seen.append(len(memo))
+    assert len([k for k in memo if str(tmp_path) in str(k)]) == 1
+    assert seen[0] == seen[1] == seen[2]
+
+
 def test_register_views_enables_sql_surface(spark, sf_dir):
     from kafkastreamsinteractivequeries_spark.sources.tables import register_views
 

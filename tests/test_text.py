@@ -451,6 +451,40 @@ def test_bloom_word_table_is_bounded_and_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def test_bloom_probe_tolerates_duplicate_word_rows(spark, sf_dir):
+    """A bitset table with several rows per word_idx (filters built per
+    shard and unioned) must give the same verdicts as the same table
+    OR-merged to one row per word: duplicates may not shift the probe
+    array."""
+    from kafkastreamsinteractivequeries_spark.operators.text import (
+        bloom_filter_grams,
+        ngram_decontaminate_bloom,
+    )
+    from kafkastreamsinteractivequeries_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    train = docs.filter(F.col("doc_id") % 20 != 0)
+    bits = dict(n=3, num_bits=1 << 16, num_hashes=4)
+    words = bloom_filter_grams(docs.filter(F.col("doc_id") % 20 == 0), **bits)
+    # split every word into its low and high 32 bits: two rows per
+    # word_idx whose bit_or is the original word
+    split = words.select(
+        "word_idx", F.col("word").bitwiseAND(F.lit(0xFFFFFFFF)).alias("word")
+    ).unionByName(
+        words.select(
+            "word_idx", F.col("word").bitwiseAND(F.lit(-(1 << 32))).alias("word")
+        )
+    )
+    assert split.count() > words.count()
+
+    def verdicts(w):
+        return sorted(
+            map(tuple, ngram_decontaminate_bloom(train, w, **bits).collect())
+        )
+
+    assert verdicts(split) == verdicts(words)
+
+
 def test_winnowing_full_matches_python_reference(spark):
     """The Spark selection must equal a direct Python implementation of
     the winnowing algorithm, and any shared substring of >= window+k-1

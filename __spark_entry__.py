@@ -6541,7 +6541,7 @@ dlam AS (
   FROM dtc FULL OUTER JOIN drc ON dtc.bucket = drc.bucket CROSS JOIN dtot
 ),
 dw AS MATERIALIZED (
-  SELECT doc_id, COUNT(*) AS n_grams, ROUND(SUM(lam), 6) AS log_weight
+  SELECT doc_id, COUNT(*) AS n_grams, ROUND(ROUND(SUM(lam), 12), 6) AS log_weight
   FROM dsg JOIN dlam USING (bucket) GROUP BY doc_id
 ),
 dtop AS (SELECT doc_id FROM dw ORDER BY log_weight DESC, doc_id LIMIT 40),

@@ -690,7 +690,8 @@ def dsir_importance_weights(
     integers so the distributions are value-identical; log_weight's
     float sum is regrouped (Σ over buckets of c·λ instead of Σ over
     occurrences of λ), the same class of reordering a distributed sum
-    already performs — the 6-decimal round absorbs it (oracle-verified).
+    already performs — ``_pround``'s 12-decimal snap absorbs it, also
+    where the two sums straddle a 6-decimal half-boundary.
     Requires ``target_ids``.
     """
     b = F.lit(num_buckets)
@@ -736,7 +737,7 @@ def dsir_importance_weights(
             .groupBy(id_col)
             .agg(
                 F.sum(cnt).cast("long").alias("n_grams"),
-                F.round(F.sum(cnt * F.col("lam")), 6).alias("log_weight"),
+                _pround(F.sum(cnt * F.col("lam")), 6).alias("log_weight"),
             )
         )
     tgt_stream = (
@@ -767,7 +768,7 @@ def dsir_importance_weights(
         .groupBy(id_col)
         .agg(
             F.count("*").alias("n_grams"),
-            F.round(F.sum("lam"), 6).alias("log_weight"),
+            _pround(F.sum("lam"), 6).alias("log_weight"),
         )
     )
 
@@ -829,7 +830,7 @@ def dsir_score_with_model(
         .groupBy(id_col)
         .agg(
             F.count("*").alias("n_grams"),
-            F.round(F.sum("lam"), 6).alias("log_weight"),
+            _pround(F.sum("lam"), 6).alias("log_weight"),
         )
     )
 

@@ -10,6 +10,15 @@ objects against it.  Routing/scatter-gather/standby code disappears —
 ``execute_response`` collects into the reference-shaped
 ``QueryResponse`` envelope with execution info (the analog of IQv2's
 ``ExecutionInfo`` / host info strings).
+
+``materialized`` is the analog of the reference's state store itself
+(``streams/KafkaStreamsService.java:84-90``): a service over an eager
+in-memory pin of the serving table, so each query filters executor
+memory instead of re-reading the source.  ``serving.rest.create_app``
+materializes its service once; ``LiveSnapshotQueryService`` is the
+exception, because it re-resolves the latest committed snapshot on
+every request.  A pin does not survive executor loss: rebuild the app
+after one (a pin that lands on storage is ROADMAP direction 3).
 """
 
 from __future__ import annotations
@@ -28,6 +37,17 @@ class InteractiveQueryService:
 
     def execute(self, query: Query) -> DataFrame:
         return query.apply(self.serving_df, key_col=self.key_col)
+
+    def materialized(self) -> "InteractiveQueryService":
+        """A service over an eager ``localCheckpoint`` of ``serving_df``
+        in the source's own partitioning.  Eager, so no broadcast thread
+        or LIMIT ever materializes the pin (or part of it) first; a
+        checkpoint rather than ``cache()``, because a cache would also
+        serve this snapshot to every later read of the same path in the
+        session."""
+        return InteractiveQueryService(
+            self.serving_df.localCheckpoint(eager=True), self.key_col, self.store_name
+        )
 
     #: default collect cap for ``execute_response`` — matches the REST
     #: layer's cap; an unlimited default is a driver-OOM invitation at
@@ -134,3 +154,8 @@ class LiveSnapshotQueryService(InteractiveQueryService):
     def serving_df(self, _df) -> None:
         # the base __init__ assigns a placeholder; live reads win
         pass
+
+    def materialized(self) -> "LiveSnapshotQueryService":
+        """Itself: a pin would freeze the snapshot this service exists
+        to keep current."""
+        return self

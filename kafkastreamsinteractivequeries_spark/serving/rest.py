@@ -26,9 +26,16 @@ whole routing layer collapses into ``InteractiveQueryService``.
 
 Scale note: REST reads hit the *serving* DataFrame. Point it at a
 compacted parquet/Delta snapshot maintained by the streaming upsert
-sink (streaming/pipeline.py), not at the raw 100 TB fact table — the
-query path is then a pruned scan of the aggregate, independent of
-ingest volume.
+sink (streaming/pipeline.py), not at the raw 100 TB fact table.
+``create_app`` materializes each static store it serves (the service's
+serving table and ``windowed_df``) once, as an eager in-memory pin, so
+a read is a filter over executor memory: it opens no file and
+shuffles nothing, and the app keeps answering from the snapshot it was
+built on even when the source files are later replaced.  A
+``LiveSnapshotQueryService`` is not pinned: it re-resolves the latest
+committed manifest on every request.  A pin does not survive executor
+loss; rebuild the app after one (a pin that lands on storage is
+ROADMAP direction 3).
 """
 
 from __future__ import annotations
@@ -98,7 +105,8 @@ def create_app(
     ``windowed_df``: optional windowed aggregate (see
     ``operators.windows.windowed_aggregate``) backing the
     ``/streams-iq/windowrange`` endpoint (the reference's dead Q5,
-    implemented).
+    implemented).  It and ``service``'s serving table are pinned here,
+    once (``InteractiveQueryService.materialized``).
     ``training_tables``: optional ``{name: () -> DataFrame}`` map of
     TRAINING-DATA telemetry stores (packing-efficiency datasheet,
     landed quantile sketches, corpus datasheets) served at
@@ -112,6 +120,9 @@ def create_app(
     from flask import Flask, jsonify, request
 
     app = Flask("ksiq-spark")
+    service = service.materialized()
+    if windowed_df is not None:
+        windowed_df = windowed_df.localCheckpoint(eager=True)
     streaming_queries = streaming_queries or []
     training_tables = training_tables or {}
 
@@ -214,6 +225,9 @@ def create_app(
              for r in rows]
         )
         resp.host_information = "spark-driver"
+        resp.add_execution_info(
+            service.store_name, [f"{type(query).__name__} over {len(rows)} rows"]
+        )
         body = _envelope(resp)
         if paged:
             body["nextCursor"] = next_cursor

@@ -20,7 +20,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -28,7 +28,9 @@ from kafkastreamsinteractivequeries_spark.session import get_spark
 from kafkastreamsinteractivequeries_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.1"
-SCRATCH = "/root/repo/.scratch/sf1x10"
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sf1x10"
+)
 REPLICAS = 10
 
 # table -> columns shifted by (replica * (max+1)) of the named key space

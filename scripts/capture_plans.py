@@ -11,7 +11,7 @@ bench executes.
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
 from kafkastreamsinteractivequeries_spark.session import get_spark

@@ -100,9 +100,8 @@ if __name__ == "__main__":
 
 def hundred_x() -> None:
     """100x variant: the pre-landed serving join one decade further out
-    (200k vectors, 1.6M code rows).  Run: python -c "import sys;
-    sys.path.insert(0,'/root/repo'); from scripts.stress_ivfpq import
-    hundred_x; hundred_x()"."""
+    (200k vectors, 1.6M code rows).  Run from the root of a checkout:
+    python -c "from scripts.stress_ivfpq import hundred_x; hundred_x()"."""
     from scripts.stress_100x import build_100x
 
     spark = get_spark("stress-ivfpq-100x")

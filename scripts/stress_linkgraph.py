@@ -3,10 +3,11 @@
 the documents table (5 hrefs each across the resolution cases), scaled
 16x.  Expected ~linear-or-better: one map-only extract/resolve pass +
 the single distinct shuffle on skinny host pairs."""
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F
 

@@ -5,10 +5,11 @@ Usage: python scripts/verify_driver.py [sf_dir] [key ...]
 
 Any extra args are query-key names; when present only those keys run.
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

@@ -6,9 +6,10 @@ QueryResponse envelope instead of raising.
 
 Usage: python scripts/verify_library_api.py [sf_dir]
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafkastreamsinteractivequeries_spark import (
     FilteredRangeQuery,

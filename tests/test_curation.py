@@ -334,6 +334,48 @@ def test_dsir_target_ids_fused_pass_matches_two_pass(spark):
         )
 
 
+def test_dsir_log_weight_rounds_alike_per_bucket_and_per_occurrence(spark):
+    """Crafted counts where the per-(doc, bucket) form Σ c·λ and the
+    per-occurrence form Σ λ of one doc's weight straddle a 6-decimal
+    half-boundary: -21.30239349999995 against -21.302393500000036.  A
+    plain round(·, 6) gives -21.302393 on one side and -21.302394 on the
+    other; the x6 driver key sums per bucket while its oracle sums per
+    occurrence, so both must round through ``_pround``."""
+    from kafkastreamsinteractivequeries_spark.operators.curation import (
+        dsir_importance_weights,
+    )
+
+    target = [2, 29, 9, 25]  # doc 1, the whole target set
+    crafted = [24, 35, 28, 30]  # doc 2
+    totals = [144, 228, 229, 104]  # per bucket, over docs 1-3
+    filler = [n - t - c for n, t, c in zip(totals, target, crafted)]  # doc 3
+    counts = [
+        (doc, bucket, n)
+        for doc, vec in ((1, target), (2, crafted), (3, filler))
+        for bucket, n in enumerate(vec)
+    ]
+    # one partition, so each doc's float sum runs in row order
+    per_bucket = spark.createDataFrame(
+        counts, "doc_id long, bucket int, _c long"
+    ).coalesce(1)
+    per_occurrence = spark.createDataFrame(
+        [(doc, bucket) for doc, bucket, n in counts for _ in range(n)],
+        "doc_id long, bucket int",
+    ).coalesce(1)
+    target_ids = spark.createDataFrame([(1,)], "doc_id long")
+
+    def weights(**stream):
+        return {
+            r.doc_id: r.log_weight
+            for r in dsir_importance_weights(
+                None, None, num_buckets=4, target_ids=target_ids, **stream
+            ).collect()
+        }
+
+    assert weights(raw_bucket_counts=per_bucket) == weights(raw_stream=per_occurrence)
+    assert weights(raw_bucket_counts=per_bucket)[2] == -21.302394
+
+
 def test_dsir_plan_broadcasts_model_no_corpus_shuffle_join(spark):
     # the λ table (≤ num_buckets rows) must broadcast to the raw gram
     # stream — a sort-merge join there would shuffle the whole corpus'

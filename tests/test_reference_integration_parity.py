@@ -103,6 +103,11 @@ def test_key_query_and_failover(spark, tmp_path):
         q2.processAllAvailable()
     finally:
         q2.stop()
+    # the first app serves the snapshot it was built on
+    for sym in ("CFLT", "ZELK"):
+        body = c.get(f"/streams-iq/keyquery/{sym}").get_json()
+        assert body["errorMessage"] is None
+        assert body["result"][0]["buys"] + body["result"][0]["sells"] == 300.0
     c2 = _client(spark, serving)
     body = c2.get("/streams-iq/keyquery/CFLT").get_json()
     assert body["result"][0]["buys"] + body["result"][0]["sells"] == 400.0

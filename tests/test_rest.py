@@ -5,19 +5,35 @@ key query, multikey, range variants, filtered range (incl. the exact
 `@.symbol == '...'` scenario), error envelopes, status endpoints.
 """
 
+import datetime as dt
+
 import pytest
 
 from kafkastreamsinteractivequeries_spark.operators.aggregation import (
     aggregate_transactions,
 )
-from kafkastreamsinteractivequeries_spark.plans.service import InteractiveQueryService
+from kafkastreamsinteractivequeries_spark.operators.windows import windowed_aggregate
+from kafkastreamsinteractivequeries_spark.plans.service import (
+    InteractiveQueryService,
+    LiveSnapshotQueryService,
+)
+from kafkastreamsinteractivequeries_spark.schemas import STOCK_TRANSACTION_SCHEMA
 from kafkastreamsinteractivequeries_spark.serving.rest import create_app
 from kafkastreamsinteractivequeries_spark.sources.tables import (
     load_table,
     transactions_from_events,
 )
+from kafkastreamsinteractivequeries_spark.streaming.pipeline import (
+    ManifestServingSink,
+    ParquetServingSink,
+)
 
 flask = pytest.importorskip("flask")
+
+
+def _client(app):
+    app.config["TESTING"] = True
+    return app.test_client()
 
 
 @pytest.fixture(scope="module")
@@ -133,6 +149,12 @@ def test_window_range_endpoint(spark, sf_dir):
     for r in body["result"]:
         assert r["buys"] > r["sells"]
         assert "2024-01-02" <= r["window_start"] <= "2024-01-05"
+    assert body["hostInformation"] == "spark-driver"
+    assert body["executionInfo"] == {
+        "stock-aggregation-state-store": [
+            f"FilteredWindowRangeQuery over {len(body['result'])} rows"
+        ]
+    }
 
     missing = c.get("/streams-iq/windowrange?from=2024-01-02 00:00:00")
     assert missing.status_code == 400
@@ -238,3 +260,66 @@ def test_nonpositive_limit_rejected_on_both_paginated_endpoints(client, spark, s
     )
     assert r.status_code == 400
     assert "limit must be >= 1" in r.get_json()["errorMessage"]
+
+
+T0 = dt.datetime(2024, 1, 1)
+
+
+def _txns(spark, rows):
+    return spark.createDataFrame(
+        [(sym, buy, amount, 5, T0 + dt.timedelta(minutes=m)) for sym, buy, amount, m in rows],
+        STOCK_TRANSACTION_SCHEMA,
+    )
+
+
+def _json(client, url):
+    body = client.get(url).get_json()
+    assert body["errorMessage"] is None, body
+    return body["result"]
+
+
+def test_app_keeps_its_snapshot_when_a_partition_is_rewritten(spark, tmp_path):
+    # test_key_query_and_failover's shape without the stream: the
+    # serving sink upserts CFLT's partition (what the checkpoint
+    # restart does) after the first app was built over the table
+    serving = str(tmp_path / "serving")
+    sink = ParquetServingSink(serving)
+    plain = [(s, j % 2 == 0, 100.0, j) for s in ("CFLT", "ZELK") for j in range(3)]
+    sink(aggregate_transactions(_txns(spark, plain)), 0)
+    c = _client(create_app(InteractiveQueryService(spark.read.parquet(serving))))
+    before = {s: _json(c, f"/streams-iq/keyquery/{s}") for s in ("CFLT", "ZELK")}
+    assert [r["buys"] + r["sells"] for rows in before.values() for r in rows] == [300.0, 300.0]
+
+    sink(aggregate_transactions(_txns(spark, plain + [("CFLT", True, 100.0, 60)])), 1)
+    for s in ("CFLT", "ZELK"):
+        assert _json(c, f"/streams-iq/keyquery/{s}") == before[s]
+    c2 = _client(create_app(InteractiveQueryService(spark.read.parquet(serving))))
+    assert _json(c2, "/streams-iq/keyquery/CFLT")[0]["buys"] == 300.0
+
+
+def test_window_store_survives_source_overwrite(spark, tmp_path):
+    src = str(tmp_path / "txns")
+    _txns(spark, [("CFLT", True, 100.0, 0), ("ZELK", False, 50.0, 70)]).write.parquet(src)
+    txns = spark.read.schema(STOCK_TRANSACTION_SCHEMA).parquet(src)
+    c = _client(create_app(
+        InteractiveQueryService(aggregate_transactions(txns)),
+        windowed_df=windowed_aggregate(txns, "1 hour"),
+    ))
+    url = "/streams-iq/windowrange?from=2024-01-01 00:00:00&to=2024-01-02 00:00:00"
+    before = _json(c, url)
+    assert sorted((r["window_start"], r["symbol"]) for r in before) == [
+        ("2024-01-01 00:00:00", "CFLT"), ("2024-01-01 01:00:00", "ZELK"),
+    ]
+
+    _txns(spark, [("MSFT", True, 1.0, 0)]).write.mode("overwrite").parquet(src)
+    assert _json(c, url) == before
+
+
+def test_live_snapshot_app_sees_later_commits(spark, tmp_path):
+    sink = ManifestServingSink(str(tmp_path / "snapshot"))
+    sink(aggregate_transactions(_txns(spark, [("CFLT", True, 100.0, 0)])), 0)
+    c = _client(create_app(LiveSnapshotQueryService(spark, sink)))
+    assert _json(c, "/streams-iq/keyquery/CFLT")[0]["buys"] == 100.0
+
+    sink(aggregate_transactions(_txns(spark, [("CFLT", True, 250.0, 0)])), 1)
+    assert _json(c, "/streams-iq/keyquery/CFLT")[0]["buys"] == 250.0

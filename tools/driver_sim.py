@@ -11,11 +11,12 @@ Usage:  python tools/driver_sim.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
